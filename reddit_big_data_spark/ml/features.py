@@ -1,4 +1,4 @@
-"""Feature-prep operators M1-M6 + M15 (SURVEY.md §2.10).
+"""Feature-prep operators M1-M4, M6 + M15 (SURVEY.md §2.10).
 
 The reference builds its feature stack as inline notebook lists of
 StringIndexer/OneHotEncoder/VectorAssembler stages
@@ -16,7 +16,6 @@ from pyspark.ml.feature import (
     StandardScaler,
     StringIndexer,
     VectorAssembler,
-    VectorIndexer,
 )
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,11 +41,6 @@ def one_hot_encoders(cols: list[str], in_suffix: str = "_idx", out_suffix: str =
 def assembler(feature_cols: list[str], out_col: str = "features") -> VectorAssembler:
     """M4 (feature_correlation.py:42; ML_Modeling.py:194)."""
     return VectorAssembler(inputCols=feature_cols, outputCol=out_col, handleInvalid="skip")
-
-
-def vector_indexer(in_col: str = "features", out_col: str = "features_indexed", max_categories: int = 10) -> VectorIndexer:
-    """M5 (ML_Modeling.py:198,310)."""
-    return VectorIndexer(inputCol=in_col, outputCol=out_col, maxCategories=max_categories)
 
 
 def scaler(in_col: str = "features", out_col: str = "features_scaled") -> StandardScaler:

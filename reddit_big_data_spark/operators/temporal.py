@@ -14,7 +14,7 @@ We implement the code's behavior.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # 8-way hour bucketing, mirroring the reference's when-chain shape
@@ -58,22 +58,4 @@ def season(month_col: Column) -> Column:
         .when(month_col.isin(3, 4, 5), "spring")
         .when(month_col.isin(6, 7, 8), "summer")
         .otherwise("fall")
-    )
-
-
-def with_time_features(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """F1-F7 bundle: hour/dow/month/date plus the derived buckets.
-
-    All derivations are single-pass projections over one timestamp column —
-    Catalyst collapses them into one codegen stage above the scan.
-    """
-    ts = F.col(ts_col)
-    return (
-        df.withColumn("hour", F.hour(ts))
-        .withColumn("dow", F.dayofweek(ts))
-        .withColumn("month", F.month(ts))
-        .withColumn("event_date", F.to_date(ts))
-        .withColumn("time_slot", time_slot(F.hour(ts)))
-        .withColumn("day_type", day_type(F.dayofweek(ts)))
-        .withColumn("season", season(F.month(ts)))
     )

@@ -173,17 +173,6 @@ def top_k_terms(tfidf: DataFrame, doc_col: str, k: int = 5) -> DataFrame:
     return tfidf.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
-def word_counts(df: DataFrame, token_col: str) -> DataFrame:
-    """N9: corpus word counts. The reference concatenates the whole corpus
-    into one driver-side string for a wordcloud (NFL_Processing.py:206-215);
-    here only (word, count) pairs ever exist, fully distributed."""
-    return (
-        df.select(F.explode(token_col).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     id_col: str,

@@ -4,19 +4,20 @@ native expressions suffice (reference code/eda/project_eda.py:331-333),
 zip-joins, cartesian products — plus the ones 100 TB adds: global
 single-partition windows and global sorts that aren't top-k.
 
-Pure Python over the executed-plan string: no Catalyst extension needed,
-usable in CI (tests/test_plan_lint.py sweeps every registered query) and
+Decides by physical node class and fields over the same JVM plan-tree
+walk the scan audit uses (plans/audit.py ``plan_nodes``, cached build
+plans and subqueries included): no Catalyst extension needed, usable in
+CI (tests/test_plan_lint.py sweeps every registered query) and
 interactively (`lint_plan(df)`).
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
-from reddit_big_data_spark.plans.audit import drop_initial_plan_sections
+from reddit_big_data_spark.plans.audit import plan_nodes
 
 
 @dataclass(frozen=True)
@@ -29,9 +30,12 @@ class Finding:
 
 
 # Wrapper nodes that sit above the logical root of the user's plan.
-_ROOT_WRAPPERS = ("AdaptiveSparkPlan", "ResultQueryStage", "==")
-# A physical Sort node with global=true ("Sort [keys], true, offset").
-_GLOBAL_SORT_NODE = re.compile(r"^Sort \[.*\], true, ")
+_ROOT_WRAPPERS = (
+    "AdaptiveSparkPlanExec",
+    "ResultQueryStageExec",
+    "WholeStageCodegenExec",
+    "InputAdapter",
+)
 # Nodes that bound a root sort's input: aggregates collapse the corpus to
 # its group count, limits/top-k to a constant. A root sort with one of
 # these anywhere beneath it is the trailing oracle-stability orderBy on
@@ -40,34 +44,69 @@ _GLOBAL_SORT_NODE = re.compile(r"^Sort \[.*\], true, ")
 # informational code (ADVICE r9: the r9 structural exemption waived ANY
 # root sort, silently passing an interactive full-corpus orderBy).
 _BOUNDING_NODES = (
-    "HashAggregate",
-    "SortAggregate",
-    "ObjectHashAggregate",
-    "TakeOrderedAndProject",
-    "CollectLimit",
-    "GlobalLimit",
+    "HashAggregateExec",
+    "SortAggregateExec",
+    "ObjectHashAggregateExec",
+    "TakeOrderedAndProjectExec",
+    "CollectLimitExec",
+    "GlobalLimitExec",
 )
 
+_DETAILS = {
+    "CARTESIAN": "CartesianProduct join — O(n*m) pair explosion",
+    "NESTED_LOOP": "BroadcastNestedLoopJoin — non-equi join fallback",
+    "PY_UDF": "row-at-a-time Python UDF — blocks codegen, forks workers",
+    # Arrow-batched Python is the sanctioned escape hatch but still worth
+    # surfacing: it should be deliberate, not accidental.
+    "PY_ARROW": "Arrow-batched Python stage (deliberate use only)",
+    "GLOBAL_WINDOW": "window with empty partitionBy — single-task sort",
+    "GLOBAL_SORT": "interior global sort without limit — full-shuffle total order",
+    "ROOT_SORT": "bare global sort at plan root over an unaggregated, "
+    "unlimited input — corpus-sized range shuffle",
+}
 
-def _node_text(line: str) -> str:
-    """Strip tree art (+- : |), indentation, and the codegen ``*(n)``
-    stage marker from a physical-plan line, leaving the node text."""
-    s = re.sub(r"^[+\-:|\s]+", "", line)
-    return re.sub(r"^\*\(\d+\) ", "", s)
 
-
-def _top_level_groups(s: str) -> int:
-    """Count top-level [...] groups in a plan-node argument list."""
-    depth = 0
-    groups = 0
-    for ch in s:
-        if ch == "[":
-            if depth == 0:
-                groups += 1
-            depth += 1
-        elif ch == "]":
-            depth = max(0, depth - 1)
-    return groups
+def _code(name: str, node, is_root: bool) -> str | None:
+    if name == "CartesianProductExec":
+        return "CARTESIAN"
+    if name == "BroadcastNestedLoopJoinExec":
+        return "NESTED_LOOP"
+    if name.startswith("BatchEvalPython"):
+        return "PY_UDF"
+    if name.startswith("ArrowEvalPython") or "MapInPandas" in name:
+        return "PY_ARROW"
+    # A Window whose spec has no partitioning funnels ALL rows into one
+    # task (an unordered, unpartitioned window is a plain aggregate).
+    if (
+        name == "WindowExec"
+        and node.partitionSpec().isEmpty()
+        and not node.orderSpec().isEmpty()
+    ):
+        return "GLOBAL_WINDOW"
+    # Global Sort (range-shuffle total order; SortExec field 1 is the
+    # `global` flag). A global sort at the plan ROOT with an
+    # aggregate/limit beneath it is the trailing oracle-stability orderBy
+    # every registry query ends with (VERDICT r1 accepted the pattern; r9
+    # made this structural so new queries can't forget a hand-list
+    # entry): it sorts exactly the already-reduced result set the caller
+    # is about to collect, so its cost is bounded by the result size, not
+    # the corpus. A BARE root sort — nothing beneath it that reduces
+    # cardinality — is a corpus-sized range shuffle; it gets the
+    # informational ROOT_SORT code (ADVICE r9 tightening), distinct from
+    # GLOBAL_SORT so the registry sweep can enforce the hazard class
+    # strictly while interactive lint users still see the warning. An
+    # INTERIOR global sort — feeding further computation — is a genuine
+    # full-shuffle hazard. Boundedness walks children only: a subquery's
+    # aggregate is not the sort's data input (ADVICE r10).
+    if name == "SortExec" and node.productElement(1):
+        if not is_root:
+            return "GLOBAL_SORT"
+        if not any(
+            n in _BOUNDING_NODES
+            for n, _ in plan_nodes(node, cached=True, subqueries=False)
+        ):
+            return "ROOT_SORT"
+    return None
 
 
 def lint_plan(df: DataFrame, allow: set[str] = frozenset()) -> list[Finding]:
@@ -77,116 +116,13 @@ def lint_plan(df: DataFrame, allow: set[str] = frozenset()) -> list[Finding]:
     oracle query whose final orderBy exists only for comparison, or
     GLOBAL_WINDOW when the window input is a pre-aggregated tiny table).
     """
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # After a DataFrame has EXECUTED, AQE's toString appends an
-    # "== Initial Plan ==" section repeating the pre-adaptive tree; drop
-    # every such section — one per AdaptiveSparkPlan, so subquery-bearing
-    # plans carry several at arbitrary nesting depths (ADVICE r9) — so
-    # (a) the root-sort exemption below doesn't false-positive on the
-    # Initial-Plan copy of the root Sort sitting at a non-root line
-    # (review r9, empirically confirmed), and (b) every other check scans
-    # the plan that actually ran, once.
-    plan = "\n".join(drop_initial_plan_sections(plan.splitlines()))
-    findings: list[Finding] = []
-
-    def add(code: str, detail: str) -> None:
-        if code not in allow:
-            findings.append(Finding(code, detail))
-
-    if "CartesianProduct" in plan:
-        add("CARTESIAN", "CartesianProduct join — O(n*m) pair explosion")
-    if "BroadcastNestedLoopJoin" in plan:
-        add("NESTED_LOOP", "BroadcastNestedLoopJoin — non-equi join fallback")
-    if "BatchEvalPython" in plan:
-        add("PY_UDF", "row-at-a-time Python UDF — blocks codegen, forks workers")
-    # Arrow-batched Python is the sanctioned escape hatch but still worth
-    # surfacing: it should be deliberate, not accidental.
-    if "ArrowEvalPython" in plan or "MapInPandas" in plan:
-        add("PY_ARROW", "Arrow-batched Python stage (deliberate use only)")
-    # A Window whose spec has no partitioning funnels ALL rows into one
-    # task. Plan text: partitioned+ordered = "Window [funcs], [partKeys],
-    # [order]" (3 groups); unpartitioned = "Window [funcs], [order]";
-    # partition-only (no orderBy) = "Window [funcs], [partKeys]". The
-    # 2-group case is global ONLY if the second group is an ordering
-    # (contains ASC/DESC direction markers).
-    for line in plan.splitlines():
-        s = line.strip().lstrip("+-: ").strip()
-        if s.startswith("Window "):
-            body = s.split(" ", 1)[1]
-            if _top_level_groups(body) < 3:
-                last = body.rsplit(", [", 1)[-1]
-                if " ASC" in last or " DESC" in last:
-                    add(
-                        "GLOBAL_WINDOW",
-                        "window with empty partitionBy — single-task sort",
-                    )
-                    break
-    # Global Sort (range-shuffle total order). A global sort at the plan
-    # ROOT with an aggregate/limit beneath it is the trailing
-    # oracle-stability orderBy every registry query ends with (VERDICT r1
-    # accepted the pattern; r9 made this structural so new queries can't
-    # forget a hand-list entry): it sorts exactly the already-reduced
-    # result set the caller is about to collect, so its cost is bounded
-    # by the result size, not the corpus. A BARE root sort — nothing
-    # beneath it that reduces cardinality — is a corpus-sized range
-    # shuffle; it gets the informational ROOT_SORT code (ADVICE r9
-    # tightening: the r9 exemption waived ANY root sort), distinct from
-    # GLOBAL_SORT so the registry sweep can enforce the hazard class
-    # strictly while interactive lint users still see the warning. An
-    # INTERIOR global sort — feeding further computation — is a genuine
-    # full-shuffle hazard and is flagged as before.
-    # (indent, node) pairs: indent is the column where the node text
-    # starts, which in Spark's tree art IS the tree depth — used below to
-    # skip inline subquery subtrees when deciding root-sort boundedness.
-    entries = []
-    for ln in plan.splitlines():
-        n = _node_text(ln)
-        if n:
-            # indent = where the tree art ends (BEFORE the codegen
-            # "*(n) " marker, whose width would skew sibling depths)
-            entries.append((len(re.match(r"^[+\-:|\s]*", ln).group(0)), n))
-    nodes = [n for _, n in entries]
-    root_i = next(
-        (i for i, n in enumerate(nodes) if not n.startswith(_ROOT_WRAPPERS)), None
-    )
-    for i, n in enumerate(nodes):
-        if not _GLOBAL_SORT_NODE.match(n):
-            continue
-        if i != root_i:
-            add(
-                "GLOBAL_SORT",
-                "interior global sort without limit — full-shuffle total order",
-            )
-            break
-        # Root sort: everything after it in the preorder walk is its
-        # subtree (it is the root), so one scan decides boundedness —
-        # EXCEPT subquery plans, which also print there and are NOT the
-        # sort's data input. ADVICE r10: an aggregate inside a scalar
-        # subquery used to suppress ROOT_SORT for a genuinely unbounded
-        # corpus-wide root sort. Subqueries print two ways: INLINE
-        # ("Subquery subquery#N" under the hosting node, its subtree at
-        # deeper indent — skipped by indent), or as a TRAILING section
-        # ("===== Subqueries ====="/"Subquery:N Hosting operator" at
-        # root indent — a hard stop).
-        bounded = False
-        skip_deeper_than = None
-        for ind, m in entries[i + 1 :]:
-            if skip_deeper_than is not None:
-                if ind > skip_deeper_than:
-                    continue
-                skip_deeper_than = None
-            if m.startswith(("===== Subqueries", "Subquery:")):
-                break
-            if m.startswith("Subquery"):
-                skip_deeper_than = ind
-                continue
-            if m.startswith(_BOUNDING_NODES):
-                bounded = True
-                break
-        if not bounded:
-            add(
-                "ROOT_SORT",
-                "bare global sort at plan root over an unaggregated, "
-                "unlimited input — corpus-sized range shuffle",
-            )
-    return findings
+    codes: list[str] = []
+    past_wrappers = False
+    walk = plan_nodes(df._jdf.queryExecution().executedPlan(), cached=True)
+    for name, node in walk:
+        is_root = not past_wrappers and name not in _ROOT_WRAPPERS
+        past_wrappers = past_wrappers or is_root
+        code = _code(name, node, is_root)
+        if code and code not in allow and code not in codes:
+            codes.append(code)
+    return [Finding(c, _DETAILS[c]) for c in codes]

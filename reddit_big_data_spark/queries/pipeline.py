@@ -442,55 +442,57 @@ def corpus_pipeline(
     #    independent of them — overlapped, construction pays
     #    max(simjoin, winnowing) instead of their sum. The count() only
     #    fills the persist; content is a pure function of the corpus.
+    #    The with-block waits for the count even when s3 construction
+    #    raises, and the session-bound target carries the caller's job
+    #    tags and local properties onto the thread.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.util import inheritable_thread_target
 
     fps = winnowing_fingerprints(docs, "doc_id", "text", k=_K, window=_W).persist()
-    _fps_pool = ThreadPoolExecutor(max_workers=1)
-    _fps_fut = _fps_pool.submit(inheritable_thread_target(fps.count))
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fps_done = pool.submit(inheritable_thread_target(spark)(fps.count))
 
-    # -- s3: near-dup cluster canonicals + singletons.
-    shingles = s1_txt.join(s2.select("doc_id"), "doc_id").select(
-        "doc_id", word_shingles(F.split("t", " "), 2).alias("shingles")
-    )
-    if near_dup_mode == "exact":
-        pairs = similarity_join(
-            shingles, "doc_id", "shingles", threshold=_NEARDUP_THRESHOLD
+        # -- s3: near-dup cluster canonicals + singletons.
+        shingles = s1_txt.join(s2.select("doc_id"), "doc_id").select(
+            "doc_id", word_shingles(F.split("t", " "), 2).alias("shingles")
         )
-    else:
-        pairs = near_duplicates(
-            shingles,
-            "doc_id",
-            "shingles",
-            threshold=_NEARDUP_THRESHOLD,
-            bands=near_dup_bands,
-            rows=near_dup_rows,
-            # signature-estimate gate 4.6 sigma below the verify
-            # threshold (sigma <= 0.5/sqrt(k) hashes, so margin
-            # 2.3/sqrt(k); 0.203 at the 32x4 default's k=128): the
-            # threshold-matched band config's background admissions never
-            # reach the shingle sets, and the margin tracks bands/rows
-            # when a deployment re-matches the curve — a fixed 0.2 would
-            # quietly shrink to ~2.3 sigma at k=32 and falsely drop ~1%
-            # of true threshold pairs (review r12)
-            est_cut=_NEARDUP_THRESHOLD
-            - 2.3 / (near_dup_bands * near_dup_rows) ** 0.5,
-        ).select("id_a", "id_b")
-    drop3 = (
-        dedup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
-    s3 = s2.join(drop3, "doc_id", "left_anti").persist()
-    # ^ two consumers (s4 chain + the m3 report row); unpersisted, each
-    #   would re-run the simjoin verify joins and the component
-    #   propagation above.
+        if near_dup_mode == "exact":
+            pairs = similarity_join(
+                shingles, "doc_id", "shingles", threshold=_NEARDUP_THRESHOLD
+            )
+        else:
+            pairs = near_duplicates(
+                shingles,
+                "doc_id",
+                "shingles",
+                threshold=_NEARDUP_THRESHOLD,
+                bands=near_dup_bands,
+                rows=near_dup_rows,
+                # signature-estimate gate 4.6 sigma below the verify
+                # threshold (sigma <= 0.5/sqrt(k) hashes, so margin
+                # 2.3/sqrt(k); 0.203 at the 32x4 default's k=128): the
+                # threshold-matched band config's background admissions
+                # never reach the shingle sets, and the margin tracks
+                # bands/rows when a deployment re-matches the curve — a
+                # fixed 0.2 would quietly shrink to ~2.3 sigma at k=32
+                # and falsely drop ~1% of true threshold pairs (review r12)
+                est_cut=_NEARDUP_THRESHOLD
+                - 2.3 / (near_dup_bands * near_dup_rows) ** 0.5,
+            ).select("id_a", "id_b")
+        drop3 = (
+            dedup_clusters(pairs)
+            .filter(F.col("doc_id") != F.col("cluster_id"))
+            .select("doc_id")
+        )
+        s3 = s2.join(drop3, "doc_id", "left_anti").persist()
+        # ^ two consumers (s4 chain + the m3 report row); unpersisted, each
+        #   would re-run the simjoin verify joins and the component
+        #   propagation above.
 
     # -- s4: join the overlapped winnowing artifact (forced above); the
-    #    thread must finish before the returned plan can consume fps.
-    _fps_fut.result()
-    _fps_pool.shutdown()
+    #    pool has drained, result() re-raises a failed count.
+    fps_done.result()
     probe_fps = (
         fps.join(
             per_doc.filter(F.col("source") == "src0").select("doc_id"),

@@ -104,34 +104,31 @@ _RECALL_ORACLE = (
 )
 
 
-def _ann_recall_frame(ann, exact: DataFrame, floor: int) -> DataFrame:
+def _ann_recall_frame(build_ann, exact: DataFrame, floor: int) -> DataFrame:
     """(query_id, exact_top1_id, exact_top1_sim, recall_ok): join the ANN
     result against the exact top-k computed in the SAME query; recall_ok
     asserts >= `floor` of the exact top-k were found. The q31 pattern:
     the driver row then checks ANN RECALL, not just arithmetic.
 
-    `ann` may be the ANN DataFrame or a zero-arg BUILDER returning it
-    (r17, guide §2.6 — overlap independent driver work): the exact top-k
+    `build_ann` is a zero-arg BUILDER returning the ANN DataFrame (r17,
+    guide §2.6 — overlap independent driver work): the exact top-k
     materialization below is a full scoring job, and the ANN index
-    builds are sequences of driver-blocking training collects; passed as
-    a builder, the exact job runs on a driver thread WHILE the index
-    trains, instead of as one more serial barrier afterwards."""
+    builds are sequences of driver-blocking training collects, so the
+    exact job runs on a driver thread WHILE the index trains, instead of
+    as one more serial barrier afterwards."""
     # Materialize the exact top-k once (k x probes rows): it feeds BOTH
     # the hit semi-join and the top-1 projection, and each would
     # otherwise re-run the corpus-scan scoring pass.
-    if callable(ann):
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark.util import inheritable_thread_target
+    from pyspark.util import inheritable_thread_target
 
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(
-                inheritable_thread_target(exact.localCheckpoint)
-            )
-            ann = ann()
-            exact = fut.result()
-    else:
-        exact = exact.localCheckpoint()
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(
+            inheritable_thread_target(exact.sparkSession)(exact.localCheckpoint)
+        )
+        ann = build_ann()
+        exact = fut.result()
     hits = (
         ann.select("query_id", "neighbor_id")
         .join(

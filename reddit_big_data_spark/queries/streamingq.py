@@ -621,7 +621,6 @@ def q139_streaming_idempotent_sink(
     micro-batch writes only its own batch_id=N directory (never the
     table root), and readers prune on batch_id as an ordinary partition
     column — a 100 TB catch-up is a sequence of bounded batch writes."""
-    import atexit as _atexit
     import shutil as _shutil
     import tempfile as _tempfile
 
@@ -632,44 +631,43 @@ def q139_streaming_idempotent_sink(
     )
 
     work = _tempfile.mkdtemp(prefix="q139_sink_")
-    # The returned DataFrame reads the sink lazily; keep the scratch dir
-    # for the process lifetime, reap it at exit.
-    _atexit.register(_shutil.rmtree, work, ignore_errors=True)
-    backlog = _os.path.join(work, "backlog")
-    target = _os.path.join(work, "target")
+    try:
+        backlog = _os.path.join(work, "backlog")
+        target = _os.path.join(work, "target")
 
-    read_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    ).repartition(4).write.parquet(backlog)
+        read_table(spark, sf_dir, "events").select(
+            "event_id", "event_type", "value"
+        ).repartition(4).write.parquet(backlog)
 
-    def _drain(ckpt: str) -> None:
-        ev = (
-            spark.readStream.schema(spark.read.parquet(backlog).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(backlog)
+        def _drain(ckpt: str) -> None:
+            ev = (
+                spark.readStream.schema(spark.read.parquet(backlog).schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(backlog)
+            )
+            start_idempotent_parquet_sink(
+                ev, target, _os.path.join(work, ckpt)
+            ).awaitTermination()
+
+        _drain("ckpt")  # normal delivery
+        _drain("ckpt_replay")  # checkpoint lost: full at-least-once replay
+        # The per-event_type aggregate (|types| rows) is checkpointed
+        # before the scratch dir goes, so the returned frame reads
+        # neither the backlog nor the sink and the whole dir is released
+        # before this returns, on success and on failure alike.
+        return (
+            read_sink(spark, target)
+            .groupBy("event_type")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum("event_id").alias("id_checksum"),
+                F.round(F.sum("value"), 4).alias("sum_value"),
+            )
+            .orderBy("event_type")
+            .localCheckpoint()
         )
-        start_idempotent_parquet_sink(
-            ev, target, _os.path.join(work, ckpt)
-        ).awaitTermination()
-
-    _drain("ckpt")  # normal delivery
-    _drain("ckpt_replay")  # checkpoint lost: full at-least-once replay
-    # The backlog copy served its purpose once both drains are done —
-    # only the SINK backs the returned (lazy) DataFrame. Drop it now
-    # rather than at exit so repeat invocations (bench min-of-3, the
-    # oracle mirror, the plan-lint sweep) hold one events copy each,
-    # not two (review r9).
-    _shutil.rmtree(backlog, ignore_errors=True)
-    return (
-        read_sink(spark, target)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("event_id").alias("id_checksum"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+    finally:
+        _shutil.rmtree(work, ignore_errors=True)
 
 
 @register(

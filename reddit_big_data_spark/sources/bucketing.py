@@ -10,7 +10,7 @@ sort-merge-join with NO Exchange (asserted in tests/test_bucketing.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -28,7 +28,3 @@ def write_bucketed(
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.format("parquet").saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -34,7 +34,7 @@ TESTDATA_TABLES = (
 )
 
 
-# Footer-schema cache for read_table (r16, guide §6/§1): a bare
+# Footer-schema cache behind table_schema (r16, guide §6/§1): a bare
 # spark.read.parquet() infers the schema from the footer on EVERY call —
 # measured 86-130 ms of driver latency per call at any scale factor,
 # paid 1-3x per query per bench pass (tens of seconds across the sweep),
@@ -49,33 +49,18 @@ TESTDATA_TABLES = (
 _SCHEMA_CACHE: dict[tuple[str, str], T.StructType] = {}
 
 
-def clear_schema_cache() -> None:
-    """Drop every cached footer schema (ADVICE r16). For the two
-    unsupported-by-default scenarios: a test that regenerates a corpus in
-    place, or a later session in the same process whose parquet-reader
-    confs (e.g. spark.sql.legacy.parquet.nanosAsLong) differ from the
-    session that populated the cache — the cache is keyed only by
-    (sf_dir, table) and would otherwise replay a schema inferred under
-    the old conf."""
-    _SCHEMA_CACHE.clear()
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """S1/S2: parquet scan. Schema comes from the footer ONCE per
-    (sf_dir, table) per process (see _SCHEMA_CACHE); filters and column
+    (sf_dir, table) per process (table_schema); filters and column
     pruning push down (verify with .explain: PushedFilters/ReadSchema).
 
     TIMESTAMP(NANOS) columns (events.ts in the testdata) arrive as long
     nanos under ``spark.sql.legacy.parquet.nanosAsLong`` and are converted
     here by truncating to micros — bit-identical to DuckDB's parquet reader.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    cached = _SCHEMA_CACHE.get((sf_dir, name))
-    if cached is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[(sf_dir, name)] = df.schema
-    else:
-        df = spark.read.schema(cached).parquet(path)
+    df = spark.read.schema(table_schema(spark, sf_dir, name)).parquet(
+        os.path.join(sf_dir, f"{name}.parquet")
+    )
     expected = TESTDATA_SCHEMAS.get(name)
     if expected is not None:
         actual = {f.name: f.dataType for f in df.schema.fields}
@@ -93,9 +78,10 @@ def read_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] = TESTDAT
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
     """The RAW footer schema of a testdata table (no ts conversion),
-    through the same per-process cache read_table fills — a streaming
-    source that needs an explicit schema should not pay a fresh footer
-    inference per query construction."""
+    inferred once per (sf_dir, table) per process (see _SCHEMA_CACHE).
+    read_table reads through it, and a streaming source that needs an
+    explicit schema should not pay a fresh footer inference per query
+    construction either."""
     key = (sf_dir, name)
     cached = _SCHEMA_CACHE.get(key)
     if cached is None:

@@ -45,6 +45,11 @@ _ALLOW: dict[str, dict[str, str]] = {
         "dictionary-trick pandas UDFs over the DISTINCT vocabulary, "
         "never the corpus rows",
     },
+    "q161_corpus_pipeline": {
+        "PY_ARROW": "the s7 stage applies q123's BPE merge loop, the "
+        "sanctioned dictionary-trick pandas UDF, to the DISTINCT "
+        "vocabulary of the s5 survivors only, never the corpus rows",
+    },
     "q169_codec_stats": {
         "PY_ARROW": "media encode/decode IS the operator: real BMP/WAV/"
         "RBV1 codec work is byte-level Python by nature (the sanctioned "
@@ -382,6 +387,17 @@ def test_lint_catches_python_udf(spark):
     f = udf(lambda x: x + 1)
     df = spark.range(3).select(f("id").alias("y"))
     assert any(f_.code == "PY_UDF" for f_ in lint_plan(df))
+
+
+def test_lint_sees_inside_cached_build_plans(spark):
+    """A persisted frame's build plan runs once, when the cache fills,
+    but it runs: the lint walks it (q161's BPE pandas UDF sits in a
+    cached stage plan)."""
+    from pyspark.sql.functions import udf
+
+    f = udf(lambda x: x + 1)
+    cached = spark.range(3).select(f("id").alias("y")).persist()
+    assert any(f_.code == "PY_UDF" for f_ in lint_plan(cached.groupBy("y").count()))
 
 
 def test_lint_accepts_partitioned_window(spark):
