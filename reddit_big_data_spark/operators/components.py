@@ -2,22 +2,19 @@
 every dedup pipeline: near-dup PAIRS become duplicate CLUSTERS, and each
 cluster keeps one canonical document.
 
-Three strategies behind one API, chosen by graph size (the same
+Two strategies behind one API, chosen by graph size (the same
 shape-gated planning AQE applies to joins):
 
-- **driver union-find** (default at <= `driver_threshold` edges): collect
-  the edge list, solve with path-compressed union-find in one pass. No
+- **driver union-find** (at <= `driver_threshold` edges): collect the
+  edge list, solve with path-compressed union-find in one pass. No
   per-round job launches — which dominate wall time on dedup-sized
   graphs.
-- **large-star/small-star** (distributed default): the alternating
+- **large-star/small-star** (above the threshold): the alternating
   two-phase algorithm of Kiveris et al., "Connected Components in
   MapReduce and Beyond" (SoCC 2014). Each phase is one groupBy-min plus
   one self-join on the node id; converges in O(log n) rounds even on
-  adversarial long-chain graphs (round-2 VERDICT item 4 — min-label
-  propagation needs O(diameter) rounds there).
-- **min-label propagation** (`algorithm="label"`): kept for dense
-  tiny-diameter graphs where its single join+groupBy per round is
-  marginally cheaper per iteration.
+  adversarial long-chain graphs, where min-label propagation would need
+  O(diameter) rounds.
 
 Scale notes: the input edge plan (typically an expensive similarity join)
 is materialized ONCE via localCheckpoint *before* any branching — round 2
@@ -29,7 +26,7 @@ every round: lineage would otherwise double per iteration. Convergence
 tests are driver scalars (count / hash-sum aggregates), never data
 collects.
 
-Self-loop normalization (ADVICE r2): all paths agree — a self-loop (x,x)
+Self-loop normalization (ADVICE r2): both paths agree — a self-loop (x,x)
 registers node x (it appears in the output labeled as its own component)
 but never links anything.
 """
@@ -43,7 +40,7 @@ from pyspark.sql import functions as F
 def _driver_union_find(edge_rows: list, spark, id_type) -> DataFrame:
     """Union-find with path compression over collected edges — the
     small-graph short-circuit. Components are labeled by their minimum
-    member id, matching the distributed paths exactly. Self-loop rows
+    member id, matching the distributed path exactly. Self-loop rows
     (x, x) register node x without linking anything, so degenerate inputs
     still surface their nodes."""
     parent: dict = {}
@@ -78,44 +75,6 @@ def _driver_union_find(edge_rows: list, spark, id_type) -> DataFrame:
     from reddit_big_data_spark.sources.io import local_df
 
     return local_df(spark, rows, schema)
-
-
-def _label_propagation(sym: DataFrame, max_iter: int) -> DataFrame:
-    """Iterative min-label propagation: every node starts labeled with its
-    own id; each round adopts the minimum label among itself and its
-    neighbors. Rounds needed = component 'min-eccentricity' — small for
-    dense dedup clusters, O(diameter) worst case."""
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("id", "src"), "src")
-            .groupBy("dst")
-            .agg(F.min("comp").alias("__nbr"))
-            .withColumnRenamed("dst", "id")
-        )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("__nbr", "comp")).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
 
 
 def _edge_checksum(edges: DataFrame) -> tuple:
@@ -201,24 +160,16 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     driver_threshold: int = 1_000_000,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """Return (id, component) for every node appearing in `edges`, where
     component = the minimum node id reachable through undirected edges.
 
-    algorithm: "auto" (size-gated: driver union-find at or under
-    `driver_threshold` edges, large-star/small-star above), "star", or
-    "label" (min-label propagation; O(diameter) rounds — dense dedup
-    graphs only).
+    Driver union-find solves graphs of at most `driver_threshold` edges;
+    large-star/small-star solves larger ones.
 
-    Raises RuntimeError if a distributed path hasn't converged within
+    Raises RuntimeError if the distributed path hasn't converged within
     max_iter rounds.
     """
-    # Validate BEFORE the eager checkpoint below: a typo'd algorithm must
-    # not cost a full execution of the (typically expensive) upstream
-    # edge plan first.
-    if algorithm not in ("auto", "star", "label"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     # Materialize the edge list ONCE before anything branches: the gate
     # count and every round after it reuse this instead of re-executing
     # the upstream plan (e.g. a similarity join) per action — and the
@@ -233,7 +184,7 @@ def connected_components(
     # disagree on them — the driver path's src <= dst filter silently
     # dropped the entire edge (NULL comparisons are never true), while
     # the star path's node frame surfaced the non-NULL endpoint AND a
-    # NULL node as singleton components. One rule for all three paths: a
+    # NULL node as singleton components. One rule for both paths: a
     # node only exists where a non-NULL edge (or self-loop) names it.
     sym = (
         edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
@@ -241,7 +192,7 @@ def connected_components(
         .select("e.src", "e.dst")
         .localCheckpoint()
     )
-    if algorithm == "auto" and sym.count() <= 2 * driver_threshold:
+    if sym.count() <= 2 * driver_threshold:
         # sym holds both directions; <= keeps each undirected edge once.
         # Self-loops survive the <= filter as (x,x), registering the node.
         directed = sym.filter(F.col("src") <= F.col("dst"))
@@ -250,8 +201,6 @@ def connected_components(
             edges.sparkSession,
             sym.schema["src"].dataType,
         )
-    if algorithm == "label":
-        return _label_propagation(sym, max_iter)
     return _star_components(sym, max_iter)
 
 

@@ -358,7 +358,7 @@ def q36_prefix_simjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # edges (prefix-filter join at 0.6), assigning every clustered doc its
 # canonical representative (the minimum member id) and cluster size — the
 # terminal dedup step a training pipeline actually keeps. Spark side is
-# iterative min-label propagation (operators/components.py); the oracle
+# size-gated connected components (operators/components.py); the oracle
 # replays it as a recursive-CTE transitive closure.
 # --------------------------------------------------------------------------
 @register(

@@ -107,10 +107,12 @@ _W = 10
 # copies would drift silently if those queries ever retuned).
 _PIPE_BUDGETS = {"en": 1500, "de": 700, "es": 600, "fr": 600, "zh": 400}
 
-# s3's near-dup Jaccard threshold — module-level so the banded mode's
-# default band config can be validated against it (the S-curve midpoint
-# must sit below it; tests/test_pipeline.py pins the arithmetic).
+# s3's near-dup Jaccard threshold and the banded mode's band config,
+# which must be matched to it (the S-curve midpoint must sit below it;
+# tests/test_pipeline.py pins the arithmetic).
 _NEARDUP_THRESHOLD = 0.6
+_NEARDUP_BANDS = 32
+_NEARDUP_ROWS = 4
 
 
 def _norm_sql(src: str) -> str:
@@ -310,8 +312,6 @@ def corpus_pipeline(
     spark: SparkSession,
     sf_dir: str,
     near_dup_mode: str = "banded",
-    near_dup_bands: int = 32,
-    near_dup_rows: int = 4,
 ) -> DataFrame:
     """The composition with a selectable s3 near-dup engine (VERDICT r10
     #3). near_dup_mode:
@@ -324,8 +324,8 @@ def corpus_pipeline(
       verify — measured exponent 0.98; the mode the 100 TB DEPLOYMENT
       runs. Verification keeps precision at 1.0; per-pair recall at
       similarity j is 1-(1-j^rows)^bands, so the band config MUST be
-      matched to the stage's threshold (ADVICE r11): the default
-      32 bands x 4 rows puts the S-curve midpoint at (1/32)^(1/4) ≈ 0.42
+      matched to the stage's threshold (ADVICE r11): the constants'
+      32 bands x 4 rows put the S-curve midpoint at (1/32)^(1/4) ≈ 0.42
       < 0.6 and recall at the threshold itself at 1-(1-0.6^4)^32 ≈ 0.988
       (0.9998 at j=0.7). The PREVIOUS 8x8 default (midpoint ~0.77,
       recall ~13% at j=0.6) silently under-dedupped pairs with Jaccard
@@ -336,11 +336,9 @@ def corpus_pipeline(
       this corpus, so candidate admission below the threshold stays
       negligible); see near_duplicates' docstring for the
       single-token-vocabulary counterexample where it is not.
-      `near_dup_bands`/`near_dup_rows` are exposed so a deployment can
-      re-match the curve if it changes the threshold.
       tests/test_pipeline.py pins the banded composition's full 9-row
       report EQUAL to the exact mode's at threshold 0.6 on the testdata,
-      and pins the default config's midpoint/recall arithmetic.
+      and pins the band config's midpoint/recall arithmetic.
 
     Why s3 does NOT read q130's managed cluster-table artifact
     (VERDICT r10 #7b, probed and declined): the artifact clusters the
@@ -467,18 +465,18 @@ def corpus_pipeline(
                 "doc_id",
                 "shingles",
                 threshold=_NEARDUP_THRESHOLD,
-                bands=near_dup_bands,
-                rows=near_dup_rows,
+                bands=_NEARDUP_BANDS,
+                rows=_NEARDUP_ROWS,
                 # signature-estimate gate 4.6 sigma below the verify
                 # threshold (sigma <= 0.5/sqrt(k) hashes, so margin
-                # 2.3/sqrt(k); 0.203 at the 32x4 default's k=128): the
+                # 2.3/sqrt(k); 0.203 at the 32x4 config's k=128): the
                 # threshold-matched band config's background admissions
                 # never reach the shingle sets, and the margin tracks
-                # bands/rows when a deployment re-matches the curve — a
+                # bands/rows if the curve is ever re-matched — a
                 # fixed 0.2 would quietly shrink to ~2.3 sigma at k=32
                 # and falsely drop ~1% of true threshold pairs (review r12)
                 est_cut=_NEARDUP_THRESHOLD
-                - 2.3 / (near_dup_bands * near_dup_rows) ** 0.5,
+                - 2.3 / (_NEARDUP_BANDS * _NEARDUP_ROWS) ** 0.5,
             ).select("id_a", "id_b")
         drop3 = (
             dedup_clusters(pairs)

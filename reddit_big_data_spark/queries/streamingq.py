@@ -621,7 +621,6 @@ def q139_streaming_idempotent_sink(
     micro-batch writes only its own batch_id=N directory (never the
     table root), and readers prune on batch_id as an ordinary partition
     column — a 100 TB catch-up is a sequence of bounded batch writes."""
-    import shutil as _shutil
     import tempfile as _tempfile
 
     from reddit_big_data_spark.sources.io import read_table
@@ -630,8 +629,9 @@ def q139_streaming_idempotent_sink(
         start_idempotent_parquet_sink,
     )
 
-    work = _tempfile.mkdtemp(prefix="q139_sink_")
-    try:
+    with _tempfile.TemporaryDirectory(
+        prefix="q139_sink_", ignore_cleanup_errors=True
+    ) as work:
         backlog = _os.path.join(work, "backlog")
         target = _os.path.join(work, "target")
 
@@ -666,8 +666,6 @@ def q139_streaming_idempotent_sink(
             .orderBy("event_type")
             .localCheckpoint()
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -753,8 +751,9 @@ def q146_streaming_outer_attribution(
     )
 
     _assert_single_backlog_file(sf_dir)
-    work = _tempfile.mkdtemp(prefix="q146_backlog_")
-    try:
+    with _tempfile.TemporaryDirectory(
+        prefix="q146_backlog_", ignore_cleanup_errors=True
+    ) as work:
         import pyarrow as _pa
         import pyarrow.parquet as _pq
 
@@ -856,8 +855,6 @@ def q146_streaming_outer_attribution(
         )
         with _stateful_drain_conf(spark, cap=4):
             run_to_memory_sink(joined, "q146_sink", mode="append")
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
     # The sentinel scrub runs on the DRAINED table, never inside the
     # streaming plan: a deterministic `user_id >= 0` in the stream is
     # pushed by Catalyst through the join and below the watermark nodes
@@ -1123,7 +1120,6 @@ def q175_streaming_reordered_multibatch(
     plus at most one lateness-window of buffered pairs; the two-file
     staging is test-corpus plumbing (a production backlog is already
     many files)."""
-    import shutil as _shutil
     import tempfile as _tempfile
 
     from pyspark.sql import Window as _W
@@ -1137,8 +1133,9 @@ def q175_streaming_reordered_multibatch(
         split_events_backlog,
     )
 
-    backlog = _tempfile.mkdtemp(prefix="rbds_q175_backlog_")
-    try:
+    with _tempfile.TemporaryDirectory(
+        prefix="rbds_q175_backlog_", ignore_cleanup_errors=True
+    ) as backlog:
         split_events_backlog(sf_dir, backlog, lateness_ms=3_600_000)
         raw = (
             spark.readStream.schema(EVENTS_RAW_SCHEMA)
@@ -1152,8 +1149,6 @@ def q175_streaming_reordered_multibatch(
                 "q175_sink",
                 mode="update",
             )
-    finally:
-        _shutil.rmtree(backlog, ignore_errors=True)
     sink = spark.table("q175_sink")
     # multi-batch proof: at least one user emitted an INTERMEDIATE state
     # (0 < n_events < its final n_events) — impossible in a single-batch

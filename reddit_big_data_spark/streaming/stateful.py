@@ -74,14 +74,9 @@ def _update_profile(
         n, s, max_gap, last_ts = state.get
     else:
         n, s, max_gap, last_ts = 0, 0.0, 0, None
-    rows = pd.concat(list(batches), ignore_index=True).sort_values("ts")
-    for ts, value in zip(rows["ts"], rows["value"]):
-        epoch = int(ts.timestamp())
-        if last_ts is not None:
-            max_gap = max(max_gap, epoch - last_ts)
-        last_ts = epoch
-        n += 1
-        s += float(value)
+    n, s, max_gap, last_ts = _fold_sorted(
+        n, s, max_gap, last_ts, sorted(_ts_value_pairs(batches))
+    )
     state.update((n, s, max_gap, last_ts))
     yield pd.DataFrame(
         {
@@ -129,10 +124,19 @@ _REORDER_STATE_SCHEMA = T.StructType(
 )
 
 
+def _ts_value_pairs(frames: Iterator[pd.DataFrame]) -> list:
+    """(epoch ms, value) pairs of every row in `frames`, unsorted."""
+    return [
+        (int(ts.value) // 1_000_000, float(value))
+        for pdf in frames
+        for ts, value in zip(pdf["ts"], pdf["value"])
+    ]
+
+
 def _fold_sorted(n, s, max_gap, last_ts, pairs):
     """Fold finalized (ts_ms, value) pairs — ALREADY sorted — into the
-    sequential profile. Same arithmetic as _update_profile: gaps in
-    whole seconds (epoch-second floor).
+    sequential profile shared by all three state machines: gaps in whole
+    seconds (epoch-second floor).
 
     TIE SEMANTICS (ADVICE r15, deliberate): the caller sorts full
     (ts_ms, value) tuples, so equal-timestamp events fold in VALUE
@@ -163,9 +167,7 @@ def _update_profile_reordered(
     else:
         n, s, max_gap, last_ts, buf = 0, 0.0, 0, None, []
     if not state.hasTimedOut:
-        for pdf in batches:
-            for ts, value in zip(pdf["ts"], pdf["value"]):
-                buf.append((int(ts.value) // 1_000_000, float(value)))
+        buf.extend(_ts_value_pairs(batches))
     wm = state.getCurrentWatermarkMs()
     # full-tuple sort: equal-ts ties break by VALUE (delivery-order
     # independent) — see _fold_sorted's tie-semantics note
@@ -266,14 +268,9 @@ class _ProfileProcessor(StatefulProcessor):
             n, s, max_gap, last_ts = self._profile.get()
         else:
             n, s, max_gap, last_ts = 0, 0.0, 0, None
-        batch = pd.concat(list(rows), ignore_index=True).sort_values("ts")
-        for ts, value in zip(batch["ts"], batch["value"]):
-            epoch = int(ts.timestamp())
-            if last_ts is not None:
-                max_gap = max(max_gap, epoch - last_ts)
-            last_ts = epoch
-            n += 1
-            s += float(value)
+        n, s, max_gap, last_ts = _fold_sorted(
+            n, s, max_gap, last_ts, sorted(_ts_value_pairs(rows))
+        )
         self._profile.update((n, s, max_gap, last_ts))
         yield pd.DataFrame(
             {

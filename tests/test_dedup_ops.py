@@ -884,7 +884,7 @@ def test_lsh_band_keys_rejects_short_signature(spark):
 
 def test_connected_components_null_edges_agree_across_strategies(spark):
     """Review r15: a NULL-endpoint edge asserts no linkage and must be
-    dropped WHOLE by every strategy. The driver union-find's src <= dst
+    dropped WHOLE by both strategies. The driver union-find's src <= dst
     filter already dropped it silently, but the star path's node frame
     used to surface the non-NULL endpoint and a NULL node as singleton
     components — the same input produced different node sets depending
@@ -899,7 +899,6 @@ def test_connected_components_null_edges_agree_across_strategies(spark):
     for kwargs in (
         {},                              # driver union-find
         {"driver_threshold": 0},         # star
-        {"algorithm": "label"},          # label propagation
     ):
         got = {
             (r["id"], r["comp"])

@@ -102,16 +102,11 @@ def test_banded_default_band_config_matches_threshold():
     per-pair recall >= 0.98 AT the threshold, i.e. the config must not
     silently raise the operative near-dup threshold the way the old 8x8
     default did (midpoint ~0.77, recall ~13% at j=0.6)."""
-    import inspect
-
     from reddit_big_data_spark.queries.pipeline import (
+        _NEARDUP_BANDS as bands,
+        _NEARDUP_ROWS as rows,
         _NEARDUP_THRESHOLD as threshold,
     )
-    from reddit_big_data_spark.queries.pipeline import corpus_pipeline
-
-    sig = inspect.signature(corpus_pipeline)
-    bands = sig.parameters["near_dup_bands"].default
-    rows = sig.parameters["near_dup_rows"].default
     midpoint = (1.0 / bands) ** (1.0 / rows)
     recall_at_t = 1.0 - (1.0 - threshold**rows) ** bands
     assert midpoint < threshold, (bands, rows, midpoint)

@@ -122,73 +122,49 @@ def _pair_set(df):
     return {(r["id_a"], r["id_b"]) for r in df.collect()}
 
 
+def _pairs_via(df, engine, **gate):
+    """Candidate pairs from cosine_candidate_pairs, asserting the size
+    gate picked `engine`: the broadcast engine streams through
+    mapInPandas, the blocked one through a grouped applyInPandas."""
+    from reddit_big_data_spark.operators.similarity import cosine_candidate_pairs
+    from reddit_big_data_spark.plans.audit import plan_nodes
+
+    out = cosine_candidate_pairs(df, 0.6, **gate)
+    names = {n for n, _ in plan_nodes(out._jdf.queryExecution().executedPlan())}
+    node = {"broadcast": "MapInPandasExec", "blocked": "FlatMapGroupsInPandasExec"}
+    assert node[engine] in names, (engine, sorted(names))
+    return _pair_set(out)
+
+
 def test_blocked_candidate_pairs_match_broadcast(spark):
     """VERDICT r2 #3: the distributed triangle-blocked path must return
     IDENTICAL pairs to the driver-broadcast path (both are exact; the
     blocked one just removes the driver-memory bound). block_rows=7 forces
     many blocks, including ragged and same-block (diagonal) groups."""
-    from reddit_big_data_spark.operators.similarity import cosine_candidate_pairs
-
     rows = [(vid, emb) for vid, _, emb in _planted(seed=3, n_clusters=4, per_cluster=10)]
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    want = _pair_set(cosine_candidate_pairs(df, 0.6, mode="broadcast"))
-    got = _pair_set(cosine_candidate_pairs(df, 0.6, mode="blocked", block_rows=7))
+    want = _pairs_via(df, "broadcast")
+    got = _pairs_via(df, "blocked", broadcast_threshold_rows=0, block_rows=7)
     assert want  # planted clusters must actually produce pairs
     assert got == want
 
 
 def test_blocked_single_block_degenerate(spark):
-    from reddit_big_data_spark.operators.similarity import cosine_candidate_pairs
-
     rows = [(vid, emb) for vid, _, emb in _planted(seed=5, n_clusters=2, per_cluster=4)]
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    want = _pair_set(cosine_candidate_pairs(df, 0.6, mode="broadcast"))
-    got = _pair_set(cosine_candidate_pairs(df, 0.6, mode="blocked", block_rows=10**6))
+    want = _pairs_via(df, "broadcast")
+    got = _pairs_via(df, "blocked", broadcast_threshold_rows=0, block_rows=10**6)
     assert got == want
 
 
 def test_auto_gate_routes_to_blocked(spark):
-    """auto with a zero-ish broadcast threshold must route through the
-    blocked path and still produce the exact pair set."""
-    from reddit_big_data_spark.operators.similarity import cosine_candidate_pairs
-
+    """A zero broadcast threshold must route through the blocked path
+    and still produce the exact pair set."""
     rows = [(vid, emb) for vid, _, emb in _planted(seed=11, n_clusters=3, per_cluster=6)]
     df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    want = _pair_set(cosine_candidate_pairs(df, 0.6, mode="broadcast"))
-    got = _pair_set(
-        cosine_candidate_pairs(
-            df, 0.6, mode="auto", broadcast_threshold_rows=0, block_rows=5
-        )
-    )
+    want = _pairs_via(df, "broadcast")
+    got = _pairs_via(df, "blocked", broadcast_threshold_rows=0, block_rows=5)
     assert got == want
-
-
-def test_lsh_candidate_pairs_recall_at_high_threshold(spark):
-    """The approximate mode's documented contract: at near-dup-grade
-    thresholds (pairs ~0.99 cosine from 5%-noise clones), the 8x12
-    hyperplane prefilter + exact verify recovers the full exact pair set.
-    (At LOW thresholds it may not — that is why it is never auto-picked.)"""
-    from reddit_big_data_spark.operators.similarity import cosine_candidate_pairs
-
-    rows = [(vid, emb) for vid, _, emb in _planted(seed=9, n_clusters=4, per_cluster=6, dims=16)]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    want = _pair_set(cosine_candidate_pairs(df, 0.95, mode="broadcast"))
-    got = _pair_set(cosine_candidate_pairs(df, 0.95, mode="lsh", dims=16))
-    assert want
-    assert got == want
-
-
-def test_lsh_candidate_pairs_no_cartesian(spark):
-    from reddit_big_data_spark.operators.similarity import cosine_candidate_pairs
-
-    rows = [(vid, emb) for vid, _, emb in _planted(seed=9, dims=16)]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    plan = (
-        cosine_candidate_pairs(df, 0.95, mode="lsh", dims=16)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_ivf_trained_centroids_recall_and_balance(spark):
@@ -368,23 +344,6 @@ def test_ivfpq_recall_on_planted_clusters(spark):
     assert recall >= 0.8, f"IVF-PQ recall {recall} below 0.8"
 
 
-def test_broadcast_mode_guards_driver_collect(spark):
-    """mode='broadcast' must refuse (loudly, pre-collect) a corpus larger
-    than the driver-scale bound instead of silently toPandas-ing it."""
-    import pytest
-
-    from reddit_big_data_spark.operators.similarity import cosine_candidate_pairs
-
-    df = spark.range(10).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"),
-    )
-    with pytest.raises(RuntimeError, match="broadcast candidate"):
-        cosine_candidate_pairs(
-            df, 0.5, mode="broadcast", broadcast_threshold_rows=5
-        )
-
-
 def test_sample_train_matrix_guards_and_determinism(spark):
     """The shared FAISS-style sample trainer: empty input raises a clear
     ValueError (not a numpy IndexError downstream), repeat calls return
@@ -493,14 +452,15 @@ def test_topk_excludes_zero_magnitude_vectors(spark):
 
 def test_broadcast_candidate_pairs_empty_corpus(spark):
     """Review r14: an empty corpus used to crash np.stack on the driver
-    in broadcast mode while blocked mode returned an empty frame — both
-    modes must agree."""
+    in the broadcast engine while the blocked engine returned an empty
+    frame — both sides of the gate must agree. A 0-row corpus is at or
+    under a 0-row threshold, so the blocked side needs a negative one."""
     from reddit_big_data_spark.operators.similarity import (
         cosine_candidate_pairs,
     )
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    for mode in ("broadcast", "blocked"):
-        out = cosine_candidate_pairs(empty, 0.5, mode=mode)
-        assert out.count() == 0, mode
-        assert out.columns == ["id_a", "id_b"], mode
+    for gate in (2_000_000, -1):
+        out = cosine_candidate_pairs(empty, 0.5, broadcast_threshold_rows=gate)
+        assert out.count() == 0, gate
+        assert out.columns == ["id_a", "id_b"], gate
