@@ -81,32 +81,6 @@ def _perm_coeffs(i: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: array<long> of num_hashes permutation minima.
-
-    Each shingle is hashed ONCE (md5, take 28 bits) and the `num_hashes`
-    'permutations' are cheap universal hashes (a_i*h + b_i) mod (2^31-1)
-    over that base hash — versus hashing every shingle num_hashes times,
-    this cuts the dominant cost ~num_hashes-fold and keeps every op in
-    codegen'd integer arithmetic. NULL-safe: empty shingle sets produce
-    NULL mins and never collide into buckets.
-    """
-    base = F.transform(
-        shingles, lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
-    )
-
-    def perm(a: int, b: int):
-        # single-arg closure: pyspark derives HOF arity from the Python
-        # signature, so default-arg tricks would create a 3-arg lambda
-        return lambda h: (F.lit(a) * h + F.lit(b)) % _MERSENNE31
-
-    mins = []
-    for i in range(num_hashes):
-        a, b = _perm_coeffs(i)
-        mins.append(F.array_min(F.transform(base, perm(a, b))))
-    return F.array(*mins)
-
-
 def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
     """Collapse a signature into `bands` bucket keys (one per row-group).
     Returns array<string> of length `bands`.
@@ -117,26 +91,25 @@ def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
     computation into every band key — measured 16x recompute (~370 s vs
     ~25 s for candidate generation at sf0.1).
 
-    NULL-safe to compose with minhash_signature directly (review r14):
-    the per-band fold concatenates with null-PROPAGATING concat (not
-    concat_ws, which SKIPS nulls), so an all-NULL signature — an empty
-    shingle set — yields NULL band keys, which no EQUI-JOIN ever
-    matches (the production bucket-join pattern), honoring
-    minhash_signature's "NULL mins never collide into buckets"
-    guarantee. (concat_ws mapped every empty doc to the SAME '' key in
+    NULL-safe (review r14): the per-band fold concatenates with
+    null-PROPAGATING concat (not concat_ws, which SKIPS nulls), so an
+    all-NULL signature (the array_min of an empty set, per component)
+    yields NULL band keys, which no EQUI-JOIN ever matches (the
+    production bucket-join pattern): NULL mins never collide into
+    buckets. (concat_ws mapped every empty doc to the SAME '' key in
     every band: a quadratic candidate blowup of exactly the docs
     claimed safe.) Spark's groupBy DOES form a NULL group, so a
     groupBy-bucketing caller must still drop null keys first;
-    lsh_candidate_pairs additionally excludes empty sets up front,
-    which also keeps its signature stage cheaper.
+    minhash_signatures additionally drops empty sets up front, which
+    also keeps the signature stage cheaper.
 
     GEOMETRY PRECONDITION (ADVICE r14): size(signature) must be >=
     bands*rows — a shorter signature would make trailing band slices
     empty, and the fold would return the '' init for EVERY doc in those
     bands: a silent all-docs collision. Enforced at runtime below via an
     assert_true folded into the init value (one O(1) size() per band —
-    the internal callers derive the signature as minhash_signature(_,
-    bands*rows) so it never fires for them; it exists for direct
+    the internal callers derive the signature as minhash_signatures(_,
+    _, _, bands*rows) so it never fires for them; it exists for direct
     callers). A NULL signature column (e.g. from an outer join) is
     exempt: it propagates to NULL keys exactly as before.
 
@@ -276,6 +249,37 @@ def minhash_signatures(
     )
 
 
+def _estimate_gate(
+    pairs: DataFrame,
+    sigs: DataFrame,
+    id_col: str,
+    left: str,
+    right: str,
+    est_cut: float | None,
+) -> DataFrame:
+    """`pairs` (columns `left`, `right`) kept where the signature Jaccard
+    estimate is >= est_cut; unchanged when est_cut is None. Both sides
+    rejoin the PERSISTED signature table `sigs` (left side first), never
+    the shingle sets."""
+    if est_cut is None:
+        return pairs
+    sig_l = sigs.select(
+        F.col(id_col).alias(left), F.col("signature").alias("__sig_l")
+    )
+    sig_r = sigs.select(
+        F.col(id_col).alias(right), F.col("signature").alias("__sig_r")
+    )
+    return (
+        pairs.join(sig_l, left)
+        .join(sig_r, right)
+        .filter(
+            signature_jaccard_estimate(F.col("__sig_l"), F.col("__sig_r"))
+            >= est_cut
+        )
+        .select(left, right)
+    )
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -286,7 +290,7 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs sharing >=1 LSH bucket, id_a < id_b.
 
-    Plan shape: explode shingles -> partial-agg signatures -> explode
+    Plan shape: in-row signatures (minhash_signatures) -> explode
     bands -> shuffle on (band_idx, band_hash) -> hash self-join inside
     buckets -> distinct. No cartesian product anywhere; the unit test
     asserts the plan has no CartesianProduct. Signatures are persisted
@@ -317,23 +321,7 @@ def lsh_candidate_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    if est_cut is not None:
-        sig_a = sigs.select(
-            F.col(id_col).alias("id_a"), F.col("signature").alias("__sig_a")
-        )
-        sig_b = sigs.select(
-            F.col(id_col).alias("id_b"), F.col("signature").alias("__sig_b")
-        )
-        pairs = (
-            pairs.join(sig_a, "id_a")
-            .join(sig_b, "id_b")
-            .filter(
-                signature_jaccard_estimate(F.col("__sig_a"), F.col("__sig_b"))
-                >= est_cut
-            )
-            .select("id_a", "id_b")
-        )
-    return pairs
+    return _estimate_gate(pairs, sigs, id_col, "id_a", "id_b", est_cut)
 
 
 def cross_set_lsh_candidates(
@@ -360,8 +348,8 @@ def cross_set_lsh_candidates(
 
     Plan shape: one signature computation + one band explosion, persisted
     and filtered into the two join sides (the persist matters — without
-    it each side re-runs the whole explode -> bands*rows-min-agg signature
-    pipeline from the source scan). At 100 TB the index side's band table
+    it each side re-runs the whole bands*rows-hash signature pass from
+    the source scan). At 100 TB the index side's band table
     is the precomputed, bucketed artifact a deployment stores; each
     ingest touches only colliding buckets."""
     sigs = minhash_signatures(sh, id_col, shingle_col, bands * rows).join(
@@ -390,24 +378,7 @@ def cross_set_lsh_candidates(
         .select("new_id", "index_id")
         .distinct()
     )
-    if est_cut is not None:
-        sig_n = sigs.select(
-            F.col(id_col).alias("new_id"), F.col("signature").alias("__sig_n")
-        )
-        sig_i = sigs.select(
-            F.col(id_col).alias("index_id"),
-            F.col("signature").alias("__sig_i"),
-        )
-        pairs = (
-            pairs.join(sig_n, "new_id")
-            .join(sig_i, "index_id")
-            .filter(
-                signature_jaccard_estimate(F.col("__sig_n"), F.col("__sig_i"))
-                >= est_cut
-            )
-            .select("new_id", "index_id")
-        )
-    return pairs
+    return _estimate_gate(pairs, sigs, id_col, "new_id", "index_id", est_cut)
 
 
 def near_duplicates(

@@ -59,6 +59,9 @@ from reddit_big_data_spark.operators.dedup import jaccard
 # Recall-safety guard: prefix length and size bounds must never be
 # UNDER-estimated from float noise in t * |s| (e.g. 0.6 * 5 straddling 3).
 _EPS = 1e-9
+# Adaptive prefix extension: tokens added to each prefix (see
+# prefix_candidates).
+_PREFIX_EXT = 4
 
 
 def _hash_sets(df: DataFrame, id_col: str, set_col: str) -> DataFrame:
@@ -72,7 +75,7 @@ def _hash_sets(df: DataFrame, id_col: str, set_col: str) -> DataFrame:
 
 
 def prefix_candidates(
-    df: DataFrame, id_col: str, set_col: str, threshold: float, ext: int = 4
+    df: DataFrame, id_col: str, set_col: str, threshold: float
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs, id_a < id_b — a SUPERSET of all pairs
     with Jaccard >= threshold (prefix-filter guarantee), generated by an
@@ -86,14 +89,15 @@ def prefix_candidates(
     which cuts candidate fan-out roughly proportionally while recall
     stays 1.0 (property-tested against brute force).
 
-    Adaptive prefix extension (`ext`; Wang et al., "Can we beat the
-    prefix filtering?", SIGMOD 2012): both prefixes are lengthened by
-    `ext` tokens (capped at the set size) and a qualifying pair must then
-    share >= ext+1 prefix tokens. Proof sketch: with <= ext matches, the
-    (ext+1)-th smallest shared token is unmatched, so it sits beyond one
-    side's EXTENDED prefix; the >= O-ext shared tokens from it onward all
-    fit in that side's tail, giving O <= (|s| - base_prefix_len), which
-    already contradicts the overlap requirement (the classic l=0 bound).
+    Adaptive prefix extension (ext = _PREFIX_EXT; Wang et al., "Can we
+    beat the prefix filtering?", SIGMOD 2012): both prefixes are
+    lengthened by ext tokens (capped at the set size) and a qualifying
+    pair must then share >= ext+1 prefix tokens. Proof sketch: with
+    <= ext matches, the (ext+1)-th smallest shared token is unmatched,
+    so it sits beyond one side's EXTENDED prefix; the >= O-ext shared
+    tokens from it onward all fit in that side's tail, giving
+    O <= (|s| - base_prefix_len), which already contradicts the overlap
+    requirement (the classic l=0 bound).
     When a prefix caps at the whole set, every shared token is matched,
     so c >= ceil(min_overlap) holds instead — hence the required count is
     least(ext+1, ceil(min_overlap)). This is the decisive filter on
@@ -132,7 +136,7 @@ def prefix_candidates(
             "thresh <= 0 qualifies every pair (use a cross join if you "
             "really mean that)"
         )
-    l = int(ext)
+    l = _PREFIX_EXT
     ex = df.select(
         F.col(id_col).alias("__id"),
         F.size(set_col).alias("__sz"),
@@ -291,18 +295,16 @@ def similarity_join(
     id_col: str,
     set_col: str,
     threshold: float,
-    hash_elements: bool = True,
-    ext: int = 4,
 ) -> DataFrame:
     """EXACT Jaccard self-join: (id_a, id_b, jaccard) for every pair with
     Jaccard >= threshold. Prefix-filtered candidates (adaptively extended
-    prefixes, see prefix_candidates) + exact verification; precision and
-    recall are both 1.0 (unlike MinHash-LSH)."""
-    if hash_elements:
-        df = _hash_sets(df, id_col, set_col)
-    df = df.persist()  # consumed by candidate generation + both verify joins
+    prefixes, see prefix_candidates) over xxhash64-ed elements + exact
+    verification; precision and recall are both 1.0 (unlike
+    MinHash-LSH)."""
+    # consumed by candidate generation + both verify joins
+    df = _hash_sets(df, id_col, set_col).persist()
     par = df.sparkSession.sparkContext.defaultParallelism
-    cand = prefix_candidates(df, id_col, set_col, threshold, ext=ext)
+    cand = prefix_candidates(df, id_col, set_col, threshold)
     sets_a = df.select(F.col(id_col).alias("id_a"), F.col(set_col).alias("__s_a"))
     sets_b = df.select(F.col(id_col).alias("id_b"), F.col(set_col).alias("__s_b"))
     return (

@@ -42,6 +42,18 @@ from reddit_big_data_spark.operators.text import normalize
 from reddit_big_data_spark.registry import register
 from reddit_big_data_spark.sources.io import read_table, sorted_report, spread
 
+# The threshold-matched near-dup config, one decision for q31, q105,
+# q161 (its threshold) and scaling.py's q31/q105 measurements: the
+# exact-Jaccard verify threshold and a 32x4 band curve whose midpoint
+# (1/32)^(1/4) ~= 0.42 sits below it (recall 0.988 AT the threshold;
+# tests/test_dedup_ops.py pins the arithmetic). The signature-estimate
+# gate sits 0.2 below the threshold: >= 4.6 sigma at 128 hashes (see
+# operators/dedup.signature_jaccard_estimate).
+_NEARDUP_THRESHOLD = 0.6
+_NEARDUP_BANDS = 32
+_NEARDUP_ROWS = 4
+_NEARDUP_EST_CUT = 0.4
+
 # Shared DuckDB CTE: normalized token arrays (twin of normalize+split).
 _ORACLE_NORM = """
     WITH norm AS (
@@ -134,7 +146,10 @@ def q31_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sorted_report(
             near_duplicates(
                 sh, "doc_id", "shingles",
-                threshold=0.6, bands=32, rows=4, est_cut=0.4,
+                threshold=_NEARDUP_THRESHOLD,
+                bands=_NEARDUP_BANDS,
+                rows=_NEARDUP_ROWS,
+                est_cut=_NEARDUP_EST_CUT,
             ).select(
                 "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
             ),
@@ -697,7 +712,7 @@ def q105_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its two side-filters internally.
     cand = cross_set_lsh_candidates(
         sh, "doc_id", "shingles", "source", "src0",
-        bands=32, rows=4, est_cut=0.4,
+        bands=_NEARDUP_BANDS, rows=_NEARDUP_ROWS, est_cut=_NEARDUP_EST_CUT,
     )
     n_side = sh.select(F.col("doc_id").alias("new_id"), F.col("shingles").alias("__sh_n"))
     i_side = sh.select(F.col("doc_id").alias("index_id"), F.col("shingles").alias("__sh_i"))
@@ -708,7 +723,7 @@ def q105_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # first would admit jaccard in [0.5999995, 0.6) that the oracle's
         # unrounded >= 0.6 predicate rejects (the q31/near_duplicates order)
         .withColumn("__j", jaccard(F.col("__sh_n"), F.col("__sh_i")))
-        .filter(F.col("__j") >= 0.6)
+        .filter(F.col("__j") >= _NEARDUP_THRESHOLD)
         .select("new_id", "index_id", F.round("__j", 6).alias("jaccard"))
         .repartition(1)  # sorted_report inline (see sources/io.py)
         .orderBy("new_id", "index_id")

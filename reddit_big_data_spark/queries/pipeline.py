@@ -13,15 +13,10 @@ Stage chain (each consumes the previous stage's survivor set):
                     the full funnel, not a per-gate report)
   s2_exact_dedup    q30/q29's token-set-md5 canonical keep (min doc_id
                     per fingerprint)
-  s3_near_dedup     near-dup pairs at Jaccard >= 0.6 -> connected
+  s3_near_dedup     near-dup pairs at Jaccard >= 0.6 (q35/q36's exact
+                    prefix-filter similarity join) -> connected
                     components -> keep cluster canonicals (min member)
-                    + singletons. TWO ENGINES (near_dup_mode, VERDICT
-                    r10 #3): "exact" = q35's prefix-filter similarity
-                    join (the registered/oracle mode), "banded" = q31's
-                    MinHash-LSH + exact verify (the 100 TB deployment
-                    mode, exponent 0.98 vs exact's 2.18; band config
-                    threshold-matched, ADVICE r11); test-pinned equal
-                    on the testdata
+                    + singletons
   s4_decontaminated q66's winnowing-fingerprint screen against the src0
                     probe set, at the composition's own (k=20, w=10)
                     contract — guaranteed catch of any verbatim overlap
@@ -60,12 +55,13 @@ cache becomes a written parquet artifact between stages (the q29
 materialized-dedup pattern, the managed-artifact path q130 ships);
 persist() is the registry-query surrogate.
 
-Scale posture: no stage joins corpus x corpus (near-dup runs banded
-MinHash-LSH at deployment scale — the registered query keeps the exact
-simjoin only so the oracle can replay it; decontamination is a
-fingerprint equi-join whose probe side AQE broadcasts), every window is
-partitioned (lang /
-source / fingerprint), and the per-stage report aggregates are attached
+Scale posture: no stage joins corpus x corpus (near-dup candidates are
+a prefix-token equi-join, never all-pairs — candidate growth is still
+~quadratic on uniform corpora, exponent 2.18 in SCALING.json, and
+q31's banded MinHash-LSH, exponent 0.98, is the scale route;
+decontamination is a fingerprint equi-join whose probe side AQE
+broadcasts), every window is partitioned (lang / source /
+fingerprint), and the per-stage report aggregates are attached
 via constant-key broadcast-hash joins (operators/attach.py), never a
 nested-loop scalar join.
 
@@ -83,7 +79,6 @@ from reddit_big_data_spark.operators.attach import attach_constant_row
 from reddit_big_data_spark.operators.bpe import bpe_encode
 from reddit_big_data_spark.operators.components import dedup_clusters
 from reddit_big_data_spark.operators.dedup import (
-    near_duplicates,
     token_set_fingerprint,
     winnowing_fingerprints,
     word_shingles,
@@ -93,6 +88,7 @@ from reddit_big_data_spark.operators.text import normalize
 from reddit_big_data_spark.queries.assembly import _N_SHARDS
 from reddit_big_data_spark.queries.cleaning import _STOPS
 from reddit_big_data_spark.queries.cooc import _Q123_MERGES, _bpe_bracket_expr
+from reddit_big_data_spark.queries.dedup import _NEARDUP_THRESHOLD
 from reddit_big_data_spark.queries.text import _PACK_BUDGET
 from reddit_big_data_spark.registry import register
 from reddit_big_data_spark.sources.io import read_table, spread
@@ -106,13 +102,6 @@ _W = 10
 # and pack contracts are IMPORTED from q113/q39 (review r10: local
 # copies would drift silently if those queries ever retuned).
 _PIPE_BUDGETS = {"en": 1500, "de": 700, "es": 600, "fr": 600, "zh": 400}
-
-# s3's near-dup Jaccard threshold and the banded mode's band config,
-# which must be matched to it (the S-curve midpoint must sit below it;
-# tests/test_pipeline.py pins the arithmetic).
-_NEARDUP_THRESHOLD = 0.6
-_NEARDUP_BANDS = 32
-_NEARDUP_ROWS = 4
 
 
 def _norm_sql(src: str) -> str:
@@ -305,40 +294,7 @@ def _oracle() -> str:
     "per-stage attrition",
 )
 def q161_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return corpus_pipeline(spark, sf_dir, near_dup_mode="exact")
-
-
-def corpus_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    near_dup_mode: str = "banded",
-) -> DataFrame:
-    """The composition with a selectable s3 near-dup engine (VERDICT r10
-    #3). near_dup_mode:
-
-    - "exact": q35/q36's prefix-filtered exact similarity join — the
-      family whose measured all-pairs exponent is 2.18 (SCALING.json);
-      the REGISTERED q161 runs this mode so the oracle compares against
-      the brute-force CTE chain.
-    - "banded": q31's MinHash-LSH candidate generation + exact-Jaccard
-      verify — measured exponent 0.98; the mode the 100 TB DEPLOYMENT
-      runs. Verification keeps precision at 1.0; per-pair recall at
-      similarity j is 1-(1-j^rows)^bands, so the band config MUST be
-      matched to the stage's threshold (ADVICE r11): the constants'
-      32 bands x 4 rows put the S-curve midpoint at (1/32)^(1/4) ≈ 0.42
-      < 0.6 and recall at the threshold itself at 1-(1-0.6^4)^32 ≈ 0.988
-      (0.9998 at j=0.7). The PREVIOUS 8x8 default (midpoint ~0.77,
-      recall ~13% at j=0.6) silently under-dedupped pairs with Jaccard
-      in [0.6, ~0.75) — it effectively raised the operative threshold to
-      ~0.75 at scale, which the equality test could not see because the
-      testdata's duplicates are near-identical. A low midpoint is safe
-      in THIS shingle space (2-word shingles: random-pair Jaccard ≈ 0 on
-      this corpus, so candidate admission below the threshold stays
-      negligible); see near_duplicates' docstring for the
-      single-token-vocabulary counterexample where it is not.
-      tests/test_pipeline.py pins the banded composition's full 9-row
-      report EQUAL to the exact mode's at threshold 0.6 on the testdata,
-      and pins the band config's midpoint/recall arithmetic.
+    """The composed pipeline (stages in the module docstring).
 
     Why s3 does NOT read q130's managed cluster-table artifact
     (VERDICT r10 #7b, probed and declined): the artifact clusters the
@@ -346,11 +302,7 @@ def corpus_pipeline(
     corpus-wide component can merge two survivors through a dropped
     intermediate document, changing the canonical-keep decision, so the
     artifact is not a drop-in for the composition's semantics (the
-    oracle's CTE chain computes on survivors). The banded mode is the
-    sanctioned scale path instead.
-    """
-    if near_dup_mode not in ("exact", "banded"):
-        raise ValueError(f"unknown near_dup_mode {near_dup_mode!r}")
+    oracle's CTE chain computes on survivors)."""
     docs = spread(read_table(spark, sf_dir, "documents"))
 
     # -- artifact 1: per-doc stats + attrs + fingerprint, ONE explode
@@ -455,29 +407,9 @@ def corpus_pipeline(
         shingles = s1_txt.join(s2.select("doc_id"), "doc_id").select(
             "doc_id", word_shingles(F.split("t", " "), 2).alias("shingles")
         )
-        if near_dup_mode == "exact":
-            pairs = similarity_join(
-                shingles, "doc_id", "shingles", threshold=_NEARDUP_THRESHOLD
-            )
-        else:
-            pairs = near_duplicates(
-                shingles,
-                "doc_id",
-                "shingles",
-                threshold=_NEARDUP_THRESHOLD,
-                bands=_NEARDUP_BANDS,
-                rows=_NEARDUP_ROWS,
-                # signature-estimate gate 4.6 sigma below the verify
-                # threshold (sigma <= 0.5/sqrt(k) hashes, so margin
-                # 2.3/sqrt(k); 0.203 at the 32x4 config's k=128): the
-                # threshold-matched band config's background admissions
-                # never reach the shingle sets, and the margin tracks
-                # bands/rows if the curve is ever re-matched — a
-                # fixed 0.2 would quietly shrink to ~2.3 sigma at k=32
-                # and falsely drop ~1% of true threshold pairs (review r12)
-                est_cut=_NEARDUP_THRESHOLD
-                - 2.3 / (_NEARDUP_BANDS * _NEARDUP_ROWS) ** 0.5,
-            ).select("id_a", "id_b")
+        pairs = similarity_join(
+            shingles, "doc_id", "shingles", threshold=_NEARDUP_THRESHOLD
+        )
         drop3 = (
             dedup_clusters(pairs)
             .filter(F.col("doc_id") != F.col("cluster_id"))

@@ -55,8 +55,10 @@ def _stateful_drain_conf(spark: SparkSession, cap: int = 8):
     re-plans streaming queries, so unlike every batch query in this
     package the partition count is paid in full. On a bench-scale backlog
     (hundreds of rows) 32 stores x up-to-2 stateful operators is pure
-    fixed cost (~1s/store-set of setup, measured r7 on q134); min(cpus, 8)
-    keeps the drain parallel while shedding that overhead. PRODUCTION
+    fixed cost (~1s/store-set of setup, measured r7 on q134); min(session
+    cores, 8) keeps the drain parallel while shedding that overhead —
+    the session's defaultParallelism, not the host's CPU count, which a
+    local[N] session can be far below. PRODUCTION
     KEEPS THE SESSION DEFAULT: at real backlog sizes the state stores are
     the parallelism, and this context restores the previous value before
     the post-drain batch aggregation plans. Correctness is unaffected —
@@ -71,7 +73,8 @@ def _stateful_drain_conf(spark: SparkSession, cap: int = 8):
     drain scoping only."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(min(int(prev), _os.cpu_count() or cap, cap)))
+    cores = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, str(min(int(prev), cores, cap)))
     try:
         yield
     finally:
@@ -539,10 +542,7 @@ def q137_streaming_stateful_profile(
     multi-batch backlog would emit INTERMEDIATE profiles into the sink
     alongside the final ones; within one batch the operator sorts each
     user's rows by event time, so ties and arrival order cannot change
-    (n, sum, max_gap). The spark-4 transformWithStateInPandas twin of
-    this operator exists (streaming/stateful.py) but is gated out of the
-    supported surface where protobuf is absent — this query IS the
-    supported arbitrary-stateful path.
+    (n, sum, max_gap).
 
     Scale shape: state is one fixed-size tuple per user in the state
     store (RocksDB in production), each micro-batch touches only the

@@ -135,8 +135,9 @@ def _ts_value_pairs(frames: Iterator[pd.DataFrame]) -> list:
 
 def _fold_sorted(n, s, max_gap, last_ts, pairs):
     """Fold finalized (ts_ms, value) pairs — ALREADY sorted — into the
-    sequential profile shared by all three state machines: gaps in whole
-    seconds (epoch-second floor).
+    sequential profile shared by both state machines (`user_profiles`,
+    `user_profiles_reordered`): gaps in whole seconds (epoch-second
+    floor).
 
     TIE SEMANTICS (ADVICE r15, deliberate): the caller sorts full
     (ts_ms, value) tuples, so equal-timestamp events fold in VALUE
@@ -242,94 +243,5 @@ def user_profiles_reordered(
             stateStructType=_REORDER_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-)
-
-
-class _ProfileProcessor(StatefulProcessor):
-    """Spark 4 StatefulProcessor twin of `_update_profile`: the SAME
-    per-user profile state machine on the transformWithStateInPandas API
-    (typed ValueState handles in the state store vs a single opaque
-    GroupState tuple; supports timers / list & map state / initial state
-    the legacy API lacks). Equivalence with both the legacy operator and
-    the batch groupBy is asserted in tests/test_streaming.py."""
-
-    def init(self, handle) -> None:
-        self._profile = handle.getValueState("profile", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        if self._profile.exists():
-            n, s, max_gap, last_ts = self._profile.get()
-        else:
-            n, s, max_gap, last_ts = 0, 0.0, 0, None
-        n, s, max_gap, last_ts = _fold_sorted(
-            n, s, max_gap, last_ts, sorted(_ts_value_pairs(rows))
-        )
-        self._profile.update((n, s, max_gap, last_ts))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "sum_value": [s],
-                "max_gap_s": [max_gap],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs RocksDB state stores AND a working
-    protobuf install for its state-server protocol; this container ships
-    neither-checkable-at-import, so callers gate on this probe (the brief's
-    import-try pattern — same as the xgboost / sparknlp adapters)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_profiles_tws(events: DataFrame) -> DataFrame:
-    """`user_profiles` on the Spark 4 transformWithStateInPandas API.
-
-    SUPPORTED-SURFACE GATE (VERDICT r7 #3): TWS needs a working protobuf
-    install for its state-server protocol plus RocksDB state stores;
-    where `tws_available()` is False this raises IMMEDIATELY with the
-    supported alternative named, instead of failing later inside the
-    stream start with an opaque py4j import error. The legacy
-    `user_profiles` (applyInPandasWithState) is the same state machine on
-    the API that runs everywhere and is what the oracle-checked registry
-    ships (q137); _ProfileProcessor's state logic itself stays covered by
-    the pure-pandas harness in tests/test_streaming.py.
-
-    Requires spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider — TWS refuses the default HDFS
-    store."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas is outside this build's supported "
-            "surface (google.protobuf is unavailable, so the TWS state "
-            "server cannot start). Use streaming.stateful.user_profiles — "
-            "the same per-user profile state machine on "
-            "applyInPandasWithState, oracle-checked as q137."
-        )
-    proc = _ProfileProcessor()
-    return (
-        events.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=PROFILE_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )

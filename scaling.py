@@ -118,6 +118,11 @@ def _doc_shingles(spark, sf_dir: str):
 
 def measure_q31(spark, sf_dir: str) -> dict:
     from reddit_big_data_spark.operators.dedup import lsh_candidate_pairs
+    from reddit_big_data_spark.queries.dedup import (
+        _NEARDUP_BANDS,
+        _NEARDUP_EST_CUT,
+        _NEARDUP_ROWS,
+    )
 
     sh = _doc_shingles(spark, sf_dir)
     out = {
@@ -126,7 +131,7 @@ def measure_q31(spark, sf_dir: str) -> dict:
         # corpus's near/below-threshold similarity mass, which on this
         # template-generated corpus is a constant allpairs fraction
         "candidates": lsh_candidate_pairs(
-            sh, "doc_id", "shingles", bands=32, rows=4
+            sh, "doc_id", "shingles", bands=_NEARDUP_BANDS, rows=_NEARDUP_ROWS
         ).count(),
     }
     # drop the raw call's persisted signature/band tables before the
@@ -135,13 +140,14 @@ def measure_q31(spark, sf_dir: str) -> dict:
     # LRU (ADVICE r12); counts are complete, so the release is safe
     sh.sparkSession.catalog.clearCache()
     # what the exact shingle-set verify actually sees: candidates after
-    # q31's production signature-estimate gate (est >= 0.4).
+    # q31's production signature-estimate gate (est >= _NEARDUP_EST_CUT).
     # Deliberately a second full operator call (re-deriving signatures)
     # rather than a hand-rolled est join over the first call's pairs:
     # the harness measures PRODUCTION stages only (review r9), at the
     # price of ~2x wall-clock for this family.
     out["verify_pairs"] = lsh_candidate_pairs(
-        sh, "doc_id", "shingles", bands=32, rows=4, est_cut=0.4
+        sh, "doc_id", "shingles",
+        bands=_NEARDUP_BANDS, rows=_NEARDUP_ROWS, est_cut=_NEARDUP_EST_CUT,
     ).count()
     return out
 
@@ -244,6 +250,11 @@ def measure_q105(spark, sf_dir: str) -> dict:
     The one banded dedup family without a measured exponent until r9
     (VERDICT r8 #9)."""
     from reddit_big_data_spark.operators.dedup import cross_set_lsh_candidates
+    from reddit_big_data_spark.queries.dedup import (
+        _NEARDUP_BANDS,
+        _NEARDUP_EST_CUT,
+        _NEARDUP_ROWS,
+    )
     from reddit_big_data_spark.sources.io import read_table
 
     src = read_table(spark, sf_dir, "documents").select("doc_id", "source")
@@ -251,7 +262,8 @@ def measure_q105(spark, sf_dir: str) -> dict:
     out = {
         "n_input": sh.count(),
         "candidates": cross_set_lsh_candidates(
-            sh, "doc_id", "shingles", "source", "src0", bands=32, rows=4
+            sh, "doc_id", "shingles", "source", "src0",
+            bands=_NEARDUP_BANDS, rows=_NEARDUP_ROWS,
         ).count(),
     }
     # same cache boundary as measure_q31: release the raw call's persisted
@@ -259,7 +271,7 @@ def measure_q105(spark, sf_dir: str) -> dict:
     spark.catalog.clearCache()
     out["verify_pairs"] = cross_set_lsh_candidates(
         sh, "doc_id", "shingles", "source", "src0",
-        bands=32, rows=4, est_cut=0.4,
+        bands=_NEARDUP_BANDS, rows=_NEARDUP_ROWS, est_cut=_NEARDUP_EST_CUT,
     ).count()
     return out
 

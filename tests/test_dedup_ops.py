@@ -812,27 +812,45 @@ def test_simhash_bits_rejects_widths_past_md5_digits(spark):
     assert simhash_bits(df, "doc_id", "toks", bits=32).count() == 1
 
 
+def test_banded_default_band_config_matches_threshold():
+    """ADVICE r11: the shared near-dup LSH S-curve (q31, q105) must be
+    matched to its verify threshold (0.6) — midpoint below the threshold
+    and per-pair recall >= 0.98 AT the threshold, i.e. the config must not
+    silently raise the operative near-dup threshold the way the old 8x8
+    default did (midpoint ~0.77, recall ~13% at j=0.6)."""
+    from reddit_big_data_spark.queries.dedup import (
+        _NEARDUP_BANDS as bands,
+        _NEARDUP_ROWS as rows,
+        _NEARDUP_THRESHOLD as threshold,
+    )
+    midpoint = (1.0 / bands) ** (1.0 / rows)
+    recall_at_t = 1.0 - (1.0 - threshold**rows) ** bands
+    assert midpoint < threshold, (bands, rows, midpoint)
+    assert recall_at_t >= 0.98, (bands, rows, recall_at_t)
+    # and the old default really was broken — keep the counterexample
+    assert 1.0 - (1.0 - threshold**8) ** 8 < 0.15
+
+
 def test_lsh_band_keys_null_signature_never_buckets(spark):
-    """Review r14: composing minhash_signature with lsh_band_keys
-    directly on empty shingle sets must honor 'NULL mins never collide
+    """Review r14: lsh_band_keys over the all-NULL MinHash signature of
+    an empty shingle set must honor 'NULL mins never collide
     into buckets' — concat_ws used to map EVERY empty doc to the same
     '' key in every band (quadratic blowup of exactly the docs claimed
     safe); the null-propagating fold yields NULL keys instead, which no
     groupBy bucket or equi-join ever matches."""
     from pyspark.sql import functions as F
 
-    from reddit_big_data_spark.operators.dedup import (
-        lsh_band_keys,
-        minhash_signature,
-    )
+    from reddit_big_data_spark.operators.dedup import lsh_band_keys
 
+    # docs 2 and 3 carry the all-NULL signature of an empty shingle set
+    # (each permutation's array_min over no hashes is NULL)
     df = spark.createDataFrame(
-        [(1, ["x", "y", "z"]), (2, []), (3, [])],
-        "doc_id long, sh array<string>",
+        [(1, list(range(11, 19))), (2, [None] * 8), (3, [None] * 8)],
+        "doc_id long, sig array<long>",
     )
     keyed = df.select(
         "doc_id",
-        lsh_band_keys(minhash_signature(F.col("sh"), 8), bands=2, rows=4).alias("keys"),
+        lsh_band_keys(F.col("sig"), bands=2, rows=4).alias("keys"),
     )
     rows = {r["doc_id"]: r["keys"] for r in keyed.collect()}
     assert all(k is not None for k in rows[1])

@@ -69,59 +69,6 @@ def test_layout_stage_metrics_are_sane(stages):
     assert 0 < stages["s8_pack"]["detail"] <= n5
 
 
-def test_banded_mode_equals_exact_mode(spark):
-    """VERDICT r10 #3: the composition's BANDED s3 (MinHash-LSH with the
-    threshold-matched 32x4 default + exact-Jaccard verify — the 100 TB
-    deployment mode, measured exponent 0.98) produces exactly the same
-    9-row per-stage report as the EXACT prefix-filter mode (the
-    registered/oracle mode, exponent 2.18) at threshold 0.6 on the
-    testdata. Verification makes banded precision 1.0, so equality holds
-    whenever LSH recall covers every >=0.6 pair; this test pins it
-    THROUGH the composition (survivor-subgraph input, canonical keep
-    decisions, downstream attrition all identical). NB equality on this
-    corpus alone cannot distinguish band configs (its duplicate pairs
-    are near-identical, where even 8x8's recall is ~1) — the per-pair
-    recall arithmetic at the threshold is pinned separately by
-    test_banded_default_band_config_matches_threshold."""
-    from reddit_big_data_spark.queries.pipeline import corpus_pipeline
-
-    exact = {
-        r["stage"]: (r["docs"], r["ws_tokens"], r["detail"])
-        for r in corpus_pipeline(spark, SF_SMOKE, near_dup_mode="exact").collect()
-    }
-    banded = {
-        r["stage"]: (r["docs"], r["ws_tokens"], r["detail"])
-        for r in corpus_pipeline(spark, SF_SMOKE, near_dup_mode="banded").collect()
-    }
-    assert banded == exact
-
-
-def test_banded_default_band_config_matches_threshold():
-    """ADVICE r11: the deployment default's LSH S-curve must be matched
-    to the stage's threshold (0.6) — midpoint below the threshold and
-    per-pair recall >= 0.98 AT the threshold, i.e. the config must not
-    silently raise the operative near-dup threshold the way the old 8x8
-    default did (midpoint ~0.77, recall ~13% at j=0.6)."""
-    from reddit_big_data_spark.queries.pipeline import (
-        _NEARDUP_BANDS as bands,
-        _NEARDUP_ROWS as rows,
-        _NEARDUP_THRESHOLD as threshold,
-    )
-    midpoint = (1.0 / bands) ** (1.0 / rows)
-    recall_at_t = 1.0 - (1.0 - threshold**rows) ** bands
-    assert midpoint < threshold, (bands, rows, midpoint)
-    assert recall_at_t >= 0.98, (bands, rows, recall_at_t)
-    # and the old default really was broken — keep the counterexample
-    assert 1.0 - (1.0 - threshold**8) ** 8 < 0.15
-
-
-def test_unknown_near_dup_mode_rejected(spark):
-    from reddit_big_data_spark.queries.pipeline import corpus_pipeline
-
-    with pytest.raises(ValueError, match="near_dup_mode"):
-        corpus_pipeline(spark, SF_SMOKE, near_dup_mode="fuzzy")
-
-
 def test_failing_near_dup_stage_leaves_no_driver_thread_job(spark, monkeypatch):
     """The winnowing count overlaps s3 construction on a driver thread.
     When the s3 engine raises, the error must propagate only after that
@@ -147,31 +94,10 @@ def test_failing_near_dup_stage_leaves_no_driver_thread_job(spark, monkeypatch):
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         with pytest.raises(RuntimeError, match="near-dup engine failed"):
-            pipeline.corpus_pipeline(spark, SF_SMOKE, near_dup_mode="exact")
+            pipeline.q161_corpus_pipeline(spark, SF_SMOKE)
         # job-end events reach the tracker through the listener bus
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         assert tracker.getActiveJobsIds() == []
     assert not [
         w for w in caught if "Tags will not be inherited" in str(w.message)
     ]
-
-
-def test_banded_mode_plan_is_scale_clean(spark):
-    """The banded composition is not a registered query, so the lint
-    sweep in test_plan_lint.py never sees it — lint it here with q161's
-    own allowance (the s7 BPE stage's PY_ARROW): the deployment mode
-    must clear the same hazard bar as the oracle mode (no cartesian, no
-    row-at-a-time UDF, no global window, no interior global sort)."""
-    from reddit_big_data_spark.plans.audit import live_file_scans
-    from reddit_big_data_spark.plans.lint import lint_plan
-    from reddit_big_data_spark.queries.pipeline import corpus_pipeline
-    from tests.test_plan_lint import _ALLOW
-
-    df = corpus_pipeline(spark, SF_SMOKE, near_dup_mode="banded")
-    allow = set(_ALLOW["q161_corpus_pipeline"])
-    findings = [f for f in lint_plan(df, allow) if f.code != "ROOT_SORT"]
-    assert not findings, "; ".join(map(str, findings))
-    # materialize-once holds in deployment mode too: the report plan
-    # reads only the persisted stage caches, zero live corpus scans
-    # (same shape the registered exact mode shows in test_scan_audit)
-    assert live_file_scans(df) == {}

@@ -413,72 +413,18 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert got == want == {(1, 10), (2, 12), (3, 13)}
 
 
-def test_transform_with_state_matches_legacy(spark):
-    """The Spark 4 transformWithStateInPandas profile operator must match
-    the legacy applyInPandasWithState one (same state machine, new API) —
-    OR, where the TWS state-server protocol can't run (no protobuf in
-    this container), the supported-surface gate must refuse LOUDLY at the
-    call site and name user_profiles as the supported twin (VERDICT r7
-    #3: the perpetual skip becomes an asserted contract — the feature is
-    formally gated OUT of the supported surface in this environment, and
-    _ProfileProcessor's state machine stays covered by the pure-pandas
-    harness below)."""
-    import pytest
-
-    from reddit_big_data_spark.streaming.stateful import (
-        tws_available,
-        user_profiles_tws,
-    )
-
-    if not tws_available():
-        stream = stream_events(spark, SF_SMOKE)
-        with pytest.raises(RuntimeError, match="supported surface"):
-            user_profiles_tws(stream)
-        return
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = stream_events(spark, SF_SMOKE)
-    run_to_memory_sink(user_profiles_tws(stream), "t_profiles_tws", mode="update")
-    got = {
-        r["user_id"]: (r["n_events"], round(r["sum_value"], 4), r["max_gap_s"])
-        for r in spark.table("t_profiles_tws").collect()
-    }
-
-    ev = read_table(spark, SF_SMOKE, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gaps = ev.withColumn(
-        "gap", F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    )
-    want = {
-        r["user_id"]: (r["n"], round(r["s"], 4), r["g"] or 0)
-        for r in gaps.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("value").alias("s"),
-            F.max("gap").alias("g"),
-        )
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
-class _FakeValueState:
-    """Stands in for a transformWithStateInPandas ValueState handle so the
-    processor's state machine runs where the TWS state server can't
-    (ADVICE r4: the protobuf skip left _ProfileProcessor with zero
-    executed coverage — a handleInputRows signature or state-tuple
-    mismatch would only surface in production)."""
+class _FakeGroupState:
+    """Stands in for the applyInPandasWithState GroupState so the profile
+    state machine runs as plain pandas, without a stream."""
 
     def __init__(self):
         self._v = None
 
+    @property
     def exists(self):
         return self._v is not None
 
+    @property
     def get(self):
         return self._v
 
@@ -486,25 +432,15 @@ class _FakeValueState:
         self._v = v
 
 
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _FakeValueState())
-
-
 def test_profile_processor_state_machine_pure_pandas():
-    """Drive _ProfileProcessor.handleInputRows directly: two micro-batches
-    for one user must accumulate (n, sum, max gap) across the ValueState
-    round-trip exactly like the legacy applyInPandasWithState function
-    and a hand computation."""
+    """Drive _update_profile directly: two micro-batches for one user
+    must accumulate (n, sum, max gap) across the GroupState round-trip
+    exactly like a hand computation."""
     import pandas as pd
 
-    from reddit_big_data_spark.streaming.stateful import _ProfileProcessor
+    from reddit_big_data_spark.streaming.stateful import _update_profile
 
-    proc = _ProfileProcessor()
-    proc.init(_FakeHandle())
+    state = _FakeGroupState()
 
     def batch(epochs_values):
         return pd.DataFrame(
@@ -515,9 +451,9 @@ def test_profile_processor_state_machine_pure_pandas():
         )
 
     # Batch 1: two events 10s apart (arriving out of order — the
-    # processor must sort by ts before folding).
+    # operator must sort by ts before folding).
     out1 = list(
-        proc.handleInputRows((7,), iter([batch([(110, 2.0), (100, 1.0)])]), None)
+        _update_profile((7,), iter([batch([(110, 2.0), (100, 1.0)])]), state)
     )
     assert len(out1) == 1
     row = out1[0].iloc[0]
@@ -530,7 +466,7 @@ def test_profile_processor_state_machine_pure_pandas():
 
     # Batch 2: one event 100s after the last -> max gap widens; counters
     # continue from the persisted state tuple, proving the round-trip.
-    out2 = list(proc.handleInputRows((7,), iter([batch([(210, 4.0)])]), None))
+    out2 = list(_update_profile((7,), iter([batch([(210, 4.0)])]), state))
     row = out2[0].iloc[0]
     assert (
         row["user_id"],
@@ -538,56 +474,6 @@ def test_profile_processor_state_machine_pure_pandas():
         row["sum_value"],
         row["max_gap_s"],
     ) == (7, 3, 7.0, 100)
-
-    proc.close()
-
-
-def test_profile_processor_matches_legacy_fn_pure_pandas():
-    """_ProfileProcessor and the legacy _update_profile must be the SAME
-    state machine: replay identical batch sequences through both (fake
-    state handles on both sides) and compare every emitted row."""
-    import pandas as pd
-
-    from reddit_big_data_spark.streaming.stateful import (
-        _ProfileProcessor,
-        _update_profile,
-    )
-
-    class _FakeGroupState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    batches = [
-        [(50, 1.5), (20, 0.5)],
-        [(60, 2.0), (300, -1.0)],
-        [(301, 0.25)],
-    ]
-
-    proc = _ProfileProcessor()
-    proc.init(_FakeHandle())
-    legacy_state = _FakeGroupState()
-
-    for ev in batches:
-        pdf = pd.DataFrame(
-            {
-                "ts": pd.to_datetime([e for e, _ in ev], unit="s"),
-                "value": [v for _, v in ev],
-            }
-        )
-        new = list(proc.handleInputRows((3,), iter([pdf.copy()]), None))[0]
-        old = list(_update_profile((3,), iter([pdf.copy()]), legacy_state))[0]
-        pd.testing.assert_frame_equal(new, old)
 
 
 def test_streaming_sketch_ingest_merges_to_exact(spark):

@@ -80,3 +80,26 @@ def test_single_backlog_file_precondition(tmp_path):
     d.mkdir()  # a DIRECTORY (multi-file layout) must also be rejected
     with pytest.raises(ValueError, match="single-micro-batch"):
         _assert_single_backlog_file(str(tmp_path))
+
+
+def test_stateful_drain_conf_sizes_from_session(spark, monkeypatch):
+    """The drain's shuffle-partition bound is the session's cores
+    (defaultParallelism), not the host's CPU count, and the previous
+    value comes back on exit."""
+    import os
+
+    from reddit_big_data_spark.queries.streamingq import _stateful_drain_conf
+
+    key = "spark.sql.shuffle.partitions"
+    monkeypatch.setattr(os, "cpu_count", lambda: 1)
+    outer = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        for cap in (8, 2):
+            with _stateful_drain_conf(spark, cap=cap):
+                got = int(spark.conf.get(key))
+            want = min(16, spark.sparkContext.defaultParallelism, cap)
+            assert got == want, (cap, got, want)
+            assert spark.conf.get(key) == "16"
+    finally:
+        spark.conf.set(key, outer)
