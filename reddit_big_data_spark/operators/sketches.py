@@ -1,9 +1,35 @@
 """Mergeable-sketch aggregation — the pattern that makes 100 TB metrics
 cheap: pre-aggregate each partition (day/shard) into a FIXED-SIZE sketch
 once, then answer rollup queries by merging sketches instead of
-re-scanning raw data. Spark ships Datasketches HLL natively
-(hll_sketch_agg / hll_union_agg / hll_sketch_estimate), so both levels
-stay in codegen'd JVM aggregates.
+re-scanning raw data.
+
+Spark ships the DataSketches aggregates, so the scale path runs on
+built-ins that stay in codegen'd JVM aggregates:
+
+- HLL (distinct counts): hll_sketch_agg / hll_union_agg /
+  hll_sketch_estimate — `daily_sketches` / `merged_distinct` /
+  `distinct_rollup` (q59);
+- KLL (row-level quantiles): kll_sketch_agg_double /
+  kll_merge_agg_double / kll_sketch_get_quantile_double —
+  `kll_quantiles` (q97);
+- Theta (distinct-set algebra): theta_sketch_agg / theta_union /
+  theta_intersection / theta_sketch_estimate — `theta_overlap_estimate`
+  (q122);
+- bitmaps (EXACT distinct counts over dense ids): bitmap_construct_agg /
+  bitmap_or_agg / bitmap_count — `bitmap_daily_partials` /
+  `bitmap_distinct_rollup` (q147).
+
+Two sketches stay hand-rolled on purpose, because no built-in answers
+their query:
+
+- KMV bottom-k (`kmv_partials` / `kmv_merge_estimate`, q88): its p50 is
+  over the DISTINCT values, read off the sampled values the sketch keeps.
+  Theta keeps hashes, not values, and a KLL built from per-day partials
+  counts a value once for every day it appears in.
+- Count-min (`cms_cells` / `cms_merge` / `cms_estimate`, q69): Spark's
+  count_min_sketch aggregate returns a serialized blob that no SQL
+  function can point-query, so the cells are kept as rows that a join
+  probes.
 
 The two-level shape below is exactly how a hypertable/cube maintains
 distinct-count metrics: level 1 runs in the daily ingest job and is tiny
@@ -50,6 +76,36 @@ def distinct_rollup(
     )
     return approx.join(exact, key_col).select(
         key_col, "n_days", "approx_nd", "exact_nd"
+    )
+
+
+def kll_quantiles(
+    df: DataFrame,
+    key_col: str,
+    part_col: str,
+    value_col: str,
+    quantiles: list[float],
+) -> DataFrame:
+    """Rank-bounded row quantiles per key on KLL sketches (Karnin, Lang &
+    Liberty, FOCS 2016), in the HLL pair's two levels: one sketch of
+    `value_col` per (key, part), merged per key — never the raw rows.
+    Compaction is randomised: a rerun may return another in-bound value.
+
+    Output: (key, est_q<NN> double ...), e.g. est_q50 for 0.5."""
+    partials = df.groupBy(key_col, part_col).agg(
+        F.kll_sketch_agg_double(F.col(value_col).cast("double")).alias("sketch")
+    )
+    merged = partials.groupBy(key_col).agg(
+        F.kll_merge_agg_double("sketch").alias("sketch")
+    )
+    return merged.select(
+        key_col,
+        *[
+            F.kll_sketch_get_quantile_double("sketch", F.lit(q)).alias(
+                f"est_q{int(round(q * 100)):02d}"
+            )
+            for q in quantiles
+        ],
     )
 
 
@@ -138,8 +194,8 @@ def cms_estimate(
 # estimate and a uniform sample of the distinct values (so quantile
 # estimates too) — Bar-Yossef et al., "Counting distinct elements in a
 # data stream" (RANDOM 2002); beats keeping HLL + a separate sampler when
-# both metrics are needed. Completes the sketch trio: HLL (distinct),
-# CMS (frequency), KMV (distinct + quantiles).
+# both metrics are needed, and is the only sketch here whose quantile is
+# over DISTINCT values (see the module docstring).
 # ---------------------------------------------------------------------------
 
 _TWO_63 = float(2**63)
@@ -225,112 +281,58 @@ def kmv_merge_estimate(
     )
 
 
-def kmv_overlap_estimate(
+def theta_overlap_estimate(
     df: DataFrame,
     group_col: str,
     value_col: str,
     group_a: str,
     group_b: str,
-    k: int = 256,
 ) -> DataFrame:
-    """KMV SET ALGEBRA (Beyer et al., "On Synopses for Distinct-Value
-    Estimation Under Multiset Operations", SIGMOD 2007): estimate
-    |A ∪ B|, |A ∩ B|, and Jaccard(A, B) of two groups' distinct-value
-    sets from their bottom-k sketches alone — the estimates compose from
-    two k-row synopses, never from the raw sets, which is the point at
-    100 TB: sketch every shard once, answer any pairwise overlap later.
-
-    - Union: merge the sketches, re-truncate to the k smallest hashes,
-      apply the standard (k-1)/u_k estimator (exact when the merged
-      sketch holds fewer than k hashes — it then IS the union).
-    - Jaccard: rho = |K(A ∪ B) ∩ S_A ∩ S_B| / k — the fraction of the
-      union's bottom-k present in both sketches (a uniform sample of the
-      union, so rho is an unbiased Jaccard estimate; Beyer et al. §5).
-    - Intersection: rho * est_union (inclusion-exclusion-free).
+    """Theta-sketch SET ALGEBRA (Dasgupta et al., "A Framework for
+    Estimating Stream Expression Cardinalities", ICDT 2016): estimate
+    |A ∪ B|, |A ∩ B| and Jaccard(A, B) of two groups' distinct-value sets
+    from their sketches alone — sketch every shard once, answer any
+    pairwise overlap later. One filtered scan builds both sketches;
+    Jaccard = intersection / union.
 
     Returns ONE row: (est_union double, est_inter double, est_jaccard
-    double). Deterministic: xxhash64 sketches, no RNG. All estimate
-    arithmetic is native array algebra over the two k-length arrays.
-
-    Scale shape: the bottom-k per group builds HIERARCHICALLY — per
-    (group, value-hash shard) partials first (every rank window is
-    bounded by one shard's distinct values), then a merge window over
-    the n_shards x k partial rows per group. A value lands in exactly
-    one shard (shard = hash(value) mod n), so the merge never sees
-    duplicate hashes across shards. No group-wide sort ever happens."""
-    from pyspark.sql import Window
-
-    n_shards = 64
-    two = df.filter(F.col(group_col).isin(group_a, group_b)).withColumn(
-        "__shard", F.pmod(F.xxhash64(F.col(value_col)), F.lit(n_shards))
+    double)."""
+    g, v = F.col(group_col), F.col(value_col)
+    sk = df.filter(g.isin(group_a, group_b)).agg(
+        F.theta_sketch_agg(F.when(g == group_a, v)).alias("__sa"),
+        F.theta_sketch_agg(F.when(g == group_b, v)).alias("__sb"),
+        F.count(F.when(g == group_a, 1)).alias("__na"),
+        F.count(F.when(g == group_b, 1)).alias("__nb"),
     )
-    partials = kmv_partials(two, group_col, "__shard", value_col, k=k)
-    ex = partials.select(group_col, F.explode("sketch").alias("hv"))
-    wm = Window.partitionBy(group_col).orderBy(F.col("hv.h"))
-    merged_sk = (
-        ex.withColumn("__rn", F.row_number().over(wm))
-        .filter(F.col("__rn") <= k)
-        .groupBy(group_col)
-        .agg(F.array_sort(F.collect_list("hv")).alias("sketch"))
-    )
-    sk = merged_sk.groupBy().agg(
-        F.max(
-            F.when(F.col(group_col) == group_a, F.col("sketch"))
-        ).alias("__sa"),
-        F.max(
-            F.when(F.col(group_col) == group_b, F.col("sketch"))
-        ).alias("__sb"),
-    )
-    ha = F.transform(F.col("__sa"), lambda s: s["h"])
-    hb = F.transform(F.col("__sb"), lambda s: s["h"])
-    merged = F.slice(
-        F.array_sort(F.array_distinct(F.concat(ha, hb))), 1, k
-    )
-    row = sk.select(ha.alias("__ha"), hb.alias("__hb"), merged.alias("__u"))
-    nu = F.size("__u")
-    # FAIL LOUDLY on an empty group (ADVICE r6): if either group has no
-    # rows its sketch aggregate is NULL, __u is NULL, size() is NULL, and
-    # the function would emit one garbage row (est_union NULL/-1) that
-    # flows silently into downstream math — the opposite of
-    # sample_train_matrix's empty-input ValueError. The guard lives INSIDE
-    # every output column (a when-branch of est_union AND of rho, which
-    # est_inter/est_jaccard derive from) so no projection of the result
-    # can prune it, and the single global-agg row always exists to
-    # evaluate it.
-    missing = F.col("__ha").isNull() | F.col("__hb").isNull()
+    # FAIL LOUDLY on an empty group (ADVICE r6): an empty group's Theta
+    # sketch is an EMPTY sketch (estimate 0), not NULL, so the estimates
+    # would silently read 0 / NaN and flow into downstream math — the
+    # opposite of sample_train_matrix's empty-input ValueError. The guard
+    # tests the per-group ROW counts and lives INSIDE every output column
+    # so no projection of the result can prune it (review r7 — reproduced
+    # live with .select("est_jaccard")), and the single global-agg row
+    # always exists to evaluate it.
+    empty_a, empty_b = F.col("__na") == 0, F.col("__nb") == 0
     empty_err = F.raise_error(
         F.concat(
-            F.lit("kmv_overlap_estimate: empty group ("),
-            F.when(
-                F.col("__ha").isNull(), F.lit(f"{group_a!r} has no rows; ")
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("__hb").isNull(), F.lit(f"{group_b!r} has no rows; ")
-            ).otherwise(F.lit("")),
+            F.lit("theta_overlap_estimate: empty group ("),
+            F.when(empty_a, F.lit(f"{group_a!r} has no rows; ")).otherwise(F.lit("")),
+            F.when(empty_b, F.lit(f"{group_b!r} has no rows; ")).otherwise(F.lit("")),
             F.lit("an overlap estimate needs both groups non-empty)"),
         )
     )
-    # u_k = the k-th smallest merged hash mapped to OPEN (0, 1) — reuse
-    # _hash_pos rather than a hand-rolled h/2^64 + 0.5, which maps
-    # Long.MIN_VALUE to exactly 0.0 and would divide by zero (review r6)
-    uk = _hash_pos(F.element_at(F.col("__u"), nu))
-    est_union = F.when(missing, empty_err.cast("double")).otherwise(
-        F.when(nu < k, nu.cast("double")).otherwise(F.lit(float(k - 1)) / uk)
-    )
-    inter_k = F.size(
-        F.array_intersect(F.array_intersect(F.col("__u"), F.col("__ha")), F.col("__hb"))
-    )
-    # The guard wraps EVERY output column, not just est_union: a consumer
-    # projecting only est_jaccard would otherwise let Catalyst prune the
-    # guarded est_union expression away and read a silent NULL (review
-    # r7 — reproduced live with .select("est_jaccard")).
-    rho = F.when(missing, empty_err.cast("double")).otherwise(
-        inter_k.cast("double") / F.least(F.lit(k), nu).cast("double")
-    )
-    return row.select(
-        est_union.alias("est_union"),
-        (rho * est_union).alias("est_inter"),
-        rho.alias("est_jaccard"),
+
+    def guarded(est):
+        return F.when(empty_a | empty_b, empty_err.cast("double")).otherwise(est)
+
+    union = F.theta_sketch_estimate(F.theta_union("__sa", "__sb")).cast("double")
+    inter = F.theta_sketch_estimate(
+        F.theta_intersection("__sa", "__sb")
+    ).cast("double")
+    return sk.select(
+        guarded(union).alias("est_union"),
+        guarded(inter).alias("est_inter"),
+        guarded(inter / union).alias("est_jaccard"),
     )
 
 

@@ -52,6 +52,27 @@ _BOUNDING_NODES = (
     "GlobalLimitExec",
 )
 
+# Every physical node that ships Arrow batches to a Python worker: scalar
+# pandas/Arrow UDFs and UDTFs, (co)grouped and plain map-in-pandas/arrow,
+# grouped-aggregate and window pandas UDFs, and the two stateful
+# streaming operators.
+_PY_ARROW_EXECS = frozenset(
+    {
+        "ArrowEvalPythonExec",
+        "ArrowEvalPythonUDTFExec",
+        "MapInPandasExec",
+        "MapInArrowExec",
+        "FlatMapGroupsInPandasExec",
+        "FlatMapGroupsInArrowExec",
+        "FlatMapCoGroupsInPandasExec",
+        "FlatMapCoGroupsInArrowExec",
+        "ArrowAggregatePythonExec",
+        "ArrowWindowPythonExec",
+        "FlatMapGroupsInPandasWithStateExec",
+        "TransformWithStateInPySparkExec",
+    }
+)
+
 _DETAILS = {
     "CARTESIAN": "CartesianProduct join — O(n*m) pair explosion",
     "NESTED_LOOP": "BroadcastNestedLoopJoin — non-equi join fallback",
@@ -73,7 +94,7 @@ def _code(name: str, node, is_root: bool) -> str | None:
         return "NESTED_LOOP"
     if name.startswith("BatchEvalPython"):
         return "PY_UDF"
-    if name.startswith("ArrowEvalPython") or "MapInPandas" in name:
+    if name in _PY_ARROW_EXECS:
         return "PY_ARROW"
     # A Window whose spec has no partitioning funnels ALL rows into one
     # task (an unordered, unpartitioned window is a plain aggregate).
@@ -109,13 +130,11 @@ def _code(name: str, node, is_root: bool) -> str | None:
     return None
 
 
-def lint_plan(df: DataFrame, allow: set[str] = frozenset()) -> list[Finding]:
-    """Return scale-hazard findings for the DataFrame's executed plan.
-
-    allow: finding codes accepted for this query (e.g. GLOBAL_SORT on an
-    oracle query whose final orderBy exists only for comparison, or
-    GLOBAL_WINDOW when the window input is a pre-aggregated tiny table).
-    """
+def lint_plan(df: DataFrame) -> list[Finding]:
+    """Return scale-hazard findings for the DataFrame's executed plan,
+    one per code. Which codes a query may carry, and why, is the
+    caller's decision (tests/test_plan_lint.py keeps the per-query
+    allowances)."""
     codes: list[str] = []
     past_wrappers = False
     walk = plan_nodes(df._jdf.queryExecution().executedPlan(), cached=True)
@@ -123,6 +142,6 @@ def lint_plan(df: DataFrame, allow: set[str] = frozenset()) -> list[Finding]:
         is_root = not past_wrappers and name not in _ROOT_WRAPPERS
         past_wrappers = past_wrappers or is_root
         code = _code(name, node, is_root)
-        if code and code not in allow and code not in codes:
+        if code and code not in codes:
             codes.append(code)
     return [Finding(c, _DETAILS[c]) for c in codes]

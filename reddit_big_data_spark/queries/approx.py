@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_big_data_spark.registry import register
-from reddit_big_data_spark.sources.io import read_table
+from reddit_big_data_spark.sources.io import read_table, sorted_report
 
 
 # --------------------------------------------------------------------------
@@ -92,7 +92,7 @@ def q22_approx_distinct_percentiles(spark: SparkSession, sf_dir: str) -> DataFra
     )
     rel = lambda a, e: F.abs(F.col(a) - F.col(e)) <= 0.08 * F.col(e)  # noqa: E731
     p = lambda i: F.element_at("__pcts", i)  # noqa: E731  (1-based)
-    return (
+    return sorted_report(
         main.join(nd_p, "l_returnflag")
         .join(nd_s, "l_returnflag")
         .select(
@@ -107,15 +107,8 @@ def q22_approx_distinct_percentiles(spark: SparkSession, sf_dir: str) -> DataFra
             rel("a_nd_s", "exact_nd_supps").alias("nd_supps_ok"),
             F.element_at("__apx", 1).between(p(1), p(3)).alias("median_in_band"),
             F.element_at("__apx", 2).between(p(4), p(6)).alias("p90_in_band"),
-        )
-        # repartition(1) before the sort (r16, guide §2.4): a global sort
-        # range-samples its CHILD RDD in a separate job, re-executing
-        # everything above the last exchange — here the 3-task exact-
-        # percentile merge (measured 1.4 s duplicated at sf0.1). A
-        # single-partition exchange of the 3 report rows satisfies the
-        # sort's distribution outright: no sampling, no re-execution.
-        .repartition(1)
-        .orderBy("l_returnflag")
+        ),
+        "l_returnflag",
     )
 
 

@@ -716,7 +716,7 @@ def q105_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_side = sh.select(F.col("doc_id").alias("new_id"), F.col("shingles").alias("__sh_n"))
     i_side = sh.select(F.col("doc_id").alias("index_id"), F.col("shingles").alias("__sh_i"))
-    return (
+    return sorted_report(
         cand.join(n_side, "new_id")
         .join(i_side, "index_id")
         # filter on the UNROUNDED value, round only for display — rounding
@@ -724,9 +724,9 @@ def q105_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # unrounded >= 0.6 predicate rejects (the q31/near_duplicates order)
         .withColumn("__j", jaccard(F.col("__sh_n"), F.col("__sh_i")))
         .filter(F.col("__j") >= _NEARDUP_THRESHOLD)
-        .select("new_id", "index_id", F.round("__j", 6).alias("jaccard"))
-        .repartition(1)  # sorted_report inline (see sources/io.py)
-        .orderBy("new_id", "index_id")
+        .select("new_id", "index_id", F.round("__j", 6).alias("jaccard")),
+        "new_id",
+        "index_id",
     )
 
 

@@ -1,7 +1,9 @@
-"""Modern-engine surfaces over `events`: the mergeable KMV sketch rollup
-(q88) and Spark 4 VariantType semi-structured access (q89). Split from
-queries/events.py so both sit inside the driver's 50-query correctness
-window (registration order == import order, queries/__init__.py)."""
+"""Modern-engine surfaces: the mergeable sketch queries — KMV over
+`events` (q88), KLL (q97) and Theta (q122) on Spark's DataSketches
+built-ins — and Spark 4 VariantType semi-structured access (q89). Split
+from queries/events.py so q88 and q89 sit inside the driver's 50-query
+correctness window (registration order == import order,
+queries/__init__.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reddit_big_data_spark.registry import register
-from reddit_big_data_spark.sources.io import read_table
+from reddit_big_data_spark.sources.io import read_table, sorted_report
 
 
 # --------------------------------------------------------------------------
@@ -78,9 +80,8 @@ def q88_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("__ps", 3).alias("__p65"),
         )
     )
-    return (
-        est.join(exact, "event_type")
-        .select(
+    return sorted_report(
+        est.join(exact, "event_type").select(
             "event_type",
             "exact_nd",
             F.round("__p50", 4).alias("exact_p50_distinct"),
@@ -91,13 +92,8 @@ def q88_kmv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("est_p50")
             .between(F.col("__p35"), F.col("__p65"))
             .alias("p50_within_bound"),
-        )
-        # single-partition sort (r16, the q22/q31 pattern): a bare
-        # orderBy's range sampler re-executes the segment above the last
-        # exchange - here the join + exact-percentile merge - once per
-        # action; 5 report rows need no parallel sort
-        .repartition(1)
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -145,17 +141,19 @@ def q89_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q97 — t-digest quantile rollup: one mergeable digest per (event_type,
-# day), merged across days, answering p50/p90 of `value` without
-# re-scanning raw rows — the row-level-quantile upgrade over q88's KMV
-# (which samples DISTINCT values only; t-digest bounds RANK error of the
-# true row distribution and concentrates accuracy at the tails). Same
-# oracle contract as q88: estimates are construction-defined, so the query
-# emits the exact quantiles plus booleans asserting the estimates landed
-# within a +-5pp rank band — observed worst-case rank error on tied
-# (discrete) data is ~0.0125, so the band is ~4x margin.
-# tests/test_sketches.py pins the tighter per-distribution bounds and the
-# merge-of-parts == whole property.
+# q97 — KLL quantile rollup (the registered name is the oracle key and
+# stays): one mergeable sketch per (event_type, day), merged across
+# days, answering p50/p90 of `value` without re-scanning raw rows — the
+# row-level-quantile upgrade over q88's KMV (which samples DISTINCT
+# values only). Spark's built-in KLL bounds the RANK error of every
+# quantile: about 1.3% at 99% confidence for the default k = 200
+# (sigma ~0.5pp), and a merged sketch keeps the bound of one built on the
+# union. Same oracle contract as q88: the query emits the exact quantiles
+# plus booleans asserting the estimates landed within a +-5pp rank band —
+# ~10 sigma, so KLL's randomised compaction leaves the booleans TRUE on
+# every run. Observed worst rank error over repeated runs: 0.7pp at
+# sf0.01, 0.5pp at sf0.1. tests/test_sketches.py pins the tighter 2pp
+# per-distribution bounds and the merge-of-parts vs whole property.
 # --------------------------------------------------------------------------
 @register(
     "q97_tdigest_rollup",
@@ -169,17 +167,15 @@ def q89_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     ORDER BY event_type
     """,
-    doc="mergeable t-digest rollup: p50/p90 per key, rank-band booleans vs exact",
+    doc="mergeable KLL sketch rollup: p50/p90 per key, rank-band booleans vs exact",
 )
 def q97_tdigest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_big_data_spark.operators.tdigest import tdigest_quantiles
+    from reddit_big_data_spark.operators.sketches import kll_quantiles
 
     ev = read_table(spark, sf_dir, "events").withColumn(
-        "__day", F.to_date("ts").cast("string")
+        "__day", F.to_date("ts")
     )
-    est = tdigest_quantiles(
-        ev, "event_type", "__day", "value", quantiles=[0.5, 0.9], delta=100
-    )
+    est = kll_quantiles(ev, "event_type", "__day", "value", quantiles=[0.5, 0.9])
     # ONE array-percentile buffer for all six quantiles (r16, the q22
     # shape): six separate percentile() aggs each collect the full value
     # multiset into their own buffer and sort it six times in the
@@ -198,38 +194,36 @@ def q97_tdigest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("__ps", 5).alias("__p85"),
         F.element_at("__ps", 6).alias("__p95"),
     )
-    return (
-        est.join(exact, "event_type")
-        .select(
+    return sorted_report(
+        est.join(exact, "event_type").select(
             "event_type",
             F.round("__p50", 4).alias("exact_p50"),
             F.round("__p90", 4).alias("exact_p90"),
             F.col("est_q50").between(F.col("__p45"), F.col("__p55")).alias("p50_in_band"),
             F.col("est_q90").between(F.col("__p85"), F.col("__p95")).alias("p90_in_band"),
-        )
-        # single-partition sort (r16): see q88's tail note above
-        .repartition(1)
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
 # --------------------------------------------------------------------------
-# q122 — KMV sketch SET ALGEBRA (Beyer et al. SIGMOD 2007): how much do
-# two order-priority classes share their customer base? Union /
-# intersection / Jaccard of the two DISTINCT customer sets estimated
-# from bottom-256 sketches alone — the q88 sketch made composable.
-# Oracle contract (the q88/q22 pattern): exact values are SQL-checkable;
-# the estimator's determinism (xxhash64, no RNG) makes the error-bound
-# booleans stable, with bounds set at ~3 sigma for k=256 (union relative
-# error 3/sqrt(k) ~= 0.19 -> 0.20; Jaccard absolute error
-# 3*sqrt(0.25/k) ~= 0.09 -> 0.10). The INTERSECTION bound is relative to
-# the UNION, not the intersection (review r6): est_inter = rho *
-# est_union, so |err| <= rho*|union err| + union*|rho err| <= 0.28 *
-# union at 3 sigma FOR ANY overlap level — an exact_inter-relative bound
-# would be unsound for low-Jaccard pairs (0.09*union can be many times a
-# small intersection). Observed at sf0.01/sf0.1: union rel err
-# 0.003/0.065, jaccard abs err 0.028/0.005, inter err 0.030/0.044 of the
-# union — well inside.
+# q122 — Theta-sketch SET ALGEBRA (the registered name is the oracle key
+# and stays): how much do two order-priority classes share their
+# customer base? Union / intersection / Jaccard of the two DISTINCT
+# customer sets from Spark's built-in Theta sketches alone. Oracle
+# contract (the q88/q22 pattern): exact values plus error-bound booleans.
+# The default nominal size k = 4096 keeps a sketch EXACT until its set
+# outgrows it (sf0.001/sf0.01 run exact). Beyond that, per sigma:
+#   - union: relative error 1/sqrt(k) ~= 0.016, so 0.20 is ~13 sigma;
+#   - intersection: counted below theta = min(theta_A, theta_B) ~= k /
+#     max(|A|, |B|), so its error is sqrt(|I| * max(|A|, |B|) / k) <=
+#     union / sqrt(k). The bound stays relative to the UNION (review r6:
+#     an exact_inter-relative one is unsound for low-Jaccard pairs);
+#     0.30 * union is ~19 sigma;
+#   - Jaccard = est_inter / est_union: error <= (1 + J) / sqrt(k) <=
+#     0.031 even when both errors add, so 0.10 is >= 3.2 sigma.
+# Observed at sf0.1: union rel err 0.004, inter err 0.011 of the union,
+# Jaccard abs err 0.008.
 # --------------------------------------------------------------------------
 @register(
     "q122_kmv_overlap",
@@ -248,17 +242,17 @@ def q97_tdigest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS inter_within_bound,
            TRUE AS jaccard_within_bound
     """,
-    doc="KMV sketch set algebra: union/intersection/Jaccard of two groups' "
+    doc="Theta sketch set algebra: union/intersection/Jaccard of two groups' "
     "distinct sets, error-bound booleans vs exact",
 )
 def q122_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from reddit_big_data_spark.operators.sketches import kmv_overlap_estimate
+    from reddit_big_data_spark.operators.sketches import theta_overlap_estimate
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_custkey"
     )
-    est = kmv_overlap_estimate(
-        orders, "o_orderpriority", "o_custkey", "1-URGENT", "2-HIGH", k=256
+    est = theta_overlap_estimate(
+        orders, "o_orderpriority", "o_custkey", "1-URGENT", "2-HIGH"
     )
     a = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
         "o_custkey"

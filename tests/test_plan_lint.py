@@ -19,7 +19,8 @@ from tests.conftest import SF_SMOKE
 # by the result size) — the ~100-entry GLOBAL_SORT boilerplate list this
 # file used to carry is gone, and a new query can no longer forget its
 # entry (the omission that shipped a red suite in round 8). Only genuinely
-# interior hazards need an allowlist row now.
+# interior hazards need an allowlist row now, and a row whose code the
+# plan no longer produces fails the sweep as stale.
 _ALLOW: dict[str, dict[str, str]] = {
     "q08_histogram_cumulative": {
         "GLOBAL_WINDOW": "cumsum window runs over the aggregated bucket table "
@@ -87,10 +88,6 @@ _ALLOW: dict[str, dict[str, str]] = {
         "NESTED_LOOP": "scalar assembly: three ONE-row frames (the sketch "
         "estimate row and the two exact count aggregates) join on "
         "lit(True) — 1x1 row joins, constant work at any corpus scale",
-        "GLOBAL_WINDOW": "the sketch-merge rank window partitions by the "
-        "two compared groups, but each partition holds only n_shards x k "
-        "PARTIAL-sketch rows (the per-shard bottom-k windows below it "
-        "are bounded by one value-hash shard's distinct values)",
     },
     "q162_kaplan_meier": {
         "GLOBAL_WINDOW": "the at-risk suffix sum and the survival "
@@ -132,9 +129,6 @@ _ALLOW: dict[str, dict[str, str]] = {
         "pattern)",
     },
     "q155_chi2_independence": {
-        "GLOBAL_WINDOW": "the grand-total margin windows over the "
-        "contingency COUNT table (<= |types| x 7 rows at any corpus "
-        "scale — q08's accepted aggregated-table pattern)",
         "NESTED_LOOP": "scalar assembly: the ONE-row dof frame joins "
         "the ONE-row chi-square row (q122's accepted pattern)",
     },
@@ -150,9 +144,6 @@ _ALLOW: dict[str, dict[str, str]] = {
         "both periods share the same bucket edges — constant-size build "
         "side at any scale (q122's accepted pattern)",
     },
-    "q24_summary_stats": {
-        "PY_ARROW": "df.summary() is driver-profile tooling",
-    },
     "q40_cosine_topk": {
         "NESTED_LOOP": "brute-force exact baseline IS corpus x probe-batch "
         "by definition (broadcast NLJ streams the corpus once); the scale "
@@ -162,10 +153,6 @@ _ALLOW: dict[str, dict[str, str]] = {
         "PY_ARROW": "deliberate BLAS block-matmul candidate pruning "
         "(mapInPandas, broadcast normalized corpus matrix) — the exact "
         "HOF fold only runs on surviving pairs",
-    },
-    "q48_embedding_dedup_clusters": {
-        "PY_ARROW": "same BLAS candidate-pruning stage as q44 feeding the "
-        "components operator",
     },
     "q49_hybrid_rrf": {
         "GLOBAL_WINDOW": "rank assignment windows over the top-50 pools "
@@ -192,12 +179,6 @@ _ALLOW: dict[str, dict[str, str]] = {
         "(decorrelated scalar subquery) — constant-size build side at any "
         "scale",
     },
-    "q127_top_supplier": {
-        "NESTED_LOOP": "broadcast of the ONE-ROW global-max-revenue "
-        "scalar (decorrelated Q15 scalar subquery) — constant-size build "
-        "side at any scale; the equality filter runs on the "
-        "|supplier|-sized aggregate, never the fact scan",
-    },
     "q92_gap_fill": {
         "NESTED_LOOP": "broadcast of the ONE-ROW (min_hour, max_hour) "
         "bounds aggregate onto the distinct-keys dim to build the dense "
@@ -213,12 +194,6 @@ _ALLOW: dict[str, dict[str, str]] = {
         "the 20-row heavy-hitter frame to evaluate the eps*N width bound "
         "— constant-size build side at any scale",
     },
-    "q41_lsh_ann": {
-        "NESTED_LOOP": "the recall oracle computes the exact top-k IN the "
-        "query (q40's broadcast-probe NLJ baseline) to compare the LSH "
-        "result against — the ANN candidate path itself is a bucket "
-        "equi-join",
-    },
     "q102_pq_ann": {
         "NESTED_LOOP": "the recall oracle computes the exact top-k IN the "
         "query (q40's broadcast-probe NLJ baseline), and the ADC scan "
@@ -233,12 +208,6 @@ _ALLOW: dict[str, dict[str, str]] = {
         "quantization step) and probe-batch x 16-row centroids; the code "
         "SCAN itself is a cell equi-join — the IVF-PQ point",
     },
-    "q97_tdigest_rollup": {
-        "PY_ARROW": "t-digest build/merge is the sanctioned grouped-map "
-        "applyInPandas surface (greedy scale-function clustering is "
-        "genuinely non-SQL); per-group output is a fixed-size centroid "
-        "array, never raw rows",
-    },
     "q166_cross_validation": {
         "GLOBAL_WINDOW": "rank runs on the |grid|-row (4) CV-metric "
         "report assembled driver-side after the folds x grid fits, "
@@ -248,8 +217,6 @@ _ALLOW: dict[str, dict[str, str]] = {
         "NESTED_LOOP": "corpus x broadcast-CENTROIDS (k=16 rows) for cell "
         "assignment — cost is |corpus| x k, the IVF quantization step; the "
         "candidate search itself is a cell equi-join",
-        "GLOBAL_WINDOW": "centroid numbering runs on the 16-row LIMITed "
-        "centroid dim only",
     },
 }
 
@@ -259,7 +226,13 @@ _QUERIES = all_queries()
 @pytest.mark.parametrize("name", sorted(_QUERIES), ids=str)
 def test_query_plan_is_scale_clean(spark, name):
     df = _QUERIES[name].fn(spark, SF_SMOKE)
-    findings = lint_plan(df, allow=set(_ALLOW.get(name, {})))
+    allow = set(_ALLOW.get(name, {}))
+    raw = lint_plan(df)
+    # An allowance the plan no longer needs is stale: it would silently
+    # waive the next regression of that code, so it must be deleted.
+    stale = allow - {f.code for f in raw}
+    assert not stale, f"{name}: stale _ALLOW codes {sorted(stale)} — delete them"
+    findings = [f for f in raw if f.code not in allow]
     # ROOT_SORT is INFORMATIONAL (ADVICE r9): it marks a trailing sort
     # whose input the lint cannot prove bounded — for the twelve registry
     # queries that trigger it (running/windowed/pair outputs), the result
@@ -387,6 +360,19 @@ def test_lint_catches_python_udf(spark):
     f = udf(lambda x: x + 1)
     df = spark.range(3).select(f("id").alias("y"))
     assert any(f_.code == "PY_UDF" for f_ in lint_plan(df))
+
+
+def test_lint_catches_grouped_map_pandas(spark):
+    """A grouped-map applyInPandas plans FlatMapGroupsInPandasExec, not
+    an ArrowEvalPython or MapInPandas node — it still ships every group
+    to a Python worker and must surface as PY_ARROW."""
+    df = (
+        spark.range(6)
+        .withColumn("g", F.col("id") % 2)
+        .groupBy("g")
+        .applyInPandas(lambda pdf: pdf, "id long, g long")
+    )
+    assert any(f_.code == "PY_ARROW" for f_ in lint_plan(df))
 
 
 def test_lint_sees_inside_cached_build_plans(spark):

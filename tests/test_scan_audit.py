@@ -48,8 +48,8 @@ _ALLOW: dict[str, dict[str, tuple[int, str]]] = {
                       "of the audited table"),
     },
     "q122_kmv_overlap": {
-        "orders": (5, "two per-group sketch builds plus the exact-count "
-                      "verification branches"),
+        "orders": (5, "one two-group sketch scan plus the four "
+                      "exact-count verification branches"),
     },
     "q44_cosine_neardup": {
         "embeddings": (3, "probe broadcast + corpus + exact-verify "

@@ -175,67 +175,95 @@ def test_kmv_estimates_within_bounds(spark):
 
 
 # ---------------------------------------------------------------------------
-# t-digest (operators/tdigest.py): rank-error bounds + mergeability
+# KLL (operators/sketches.py kll_quantiles, q97): rank-error bounds +
+# mergeability. The test names keep q97's registered name.
 # ---------------------------------------------------------------------------
 
+# Spark's default KLL k: every input below is larger, so both sketch
+# levels compact (and compaction is where KLL's randomised error lives).
+_KLL_K = 200
+_KLL_QS = (0.01, 0.1, 0.5, 0.9, 0.99)
 
-def test_tdigest_rank_error_bounded():
-    """Pure-numpy core: for uniform, heavy-tailed and TIED (discrete)
-    data, every estimated quantile's realized rank stays within 2pp of
-    the target (observed worst case ~1.25pp on ties, delta=100)."""
+
+def _kll_inputs(seed):
+    """Uniform, heavy-tailed and TIED (discrete) data, 20k rows each."""
     import numpy as np
 
-    from reddit_big_data_spark.operators.tdigest import _compress, _quantile
-
-    rng = np.random.RandomState(7)
-    for data in (
-        rng.uniform(0, 100, 20000),
-        rng.lognormal(0, 2, 20000),
-        rng.randint(0, 50, 20000).astype(float),
-    ):
-        m, w = _compress(data, np.ones_like(data), 100)
-        assert len(m) <= 200  # fixed-size contract
-        assert abs(w.sum() - len(data)) < 1e-6
-        for q in (0.01, 0.1, 0.5, 0.9, 0.99):
-            est = _quantile(m, w, data.min(), data.max(), q)
-            rank = (data <= est).mean()
-            assert abs(rank - q) <= 0.02, (q, rank)
+    rng = np.random.RandomState(seed)
+    return {
+        "uniform": rng.uniform(0, 100, 20000),
+        "lognormal": rng.lognormal(0, 2, 20000),
+        "tied": rng.randint(0, 50, 20000).astype(float),
+    }
 
 
-def test_tdigest_merge_of_parts_matches_whole():
-    """The rollup contract: merging per-part digests must estimate like a
-    single whole-data digest (both within 2pp rank error of truth)."""
+def _kll_estimates(spark, data, n_parts):
+    """kll_quantiles over each input split into `n_parts` contiguous
+    parts: {dist: {q: estimate}}."""
     import numpy as np
+    import pandas as pd
 
-    from reddit_big_data_spark.operators.tdigest import _compress, _quantile
+    from reddit_big_data_spark.operators.sketches import kll_quantiles
 
-    rng = np.random.RandomState(11)
-    data = rng.lognormal(0, 2, 40000)
-    ms, ws = [], []
-    for p in np.array_split(data, 8):
-        m, w = _compress(p, np.ones_like(p), 100)
-        ms.append(m)
-        ws.append(w)
-    mm, mw = _compress(np.concatenate(ms), np.concatenate(ws), 100)
-    assert abs(mw.sum() - len(data)) < 1e-6
-    for q in (0.01, 0.1, 0.5, 0.9, 0.99):
-        est = _quantile(mm, mw, data.min(), data.max(), q)
-        rank = (data <= est).mean()
-        assert abs(rank - q) <= 0.02, (q, rank)
+    pdf = pd.concat(
+        pd.DataFrame({"dist": name, "part": i, "v": chunk})
+        for name, d in data.items()
+        for i, chunk in enumerate(np.array_split(d, n_parts))
+    )
+    assert len(pdf) // (len(data) * n_parts) > _KLL_K  # every sketch compacts
+    rows = kll_quantiles(
+        spark.createDataFrame(pdf), "dist", "part", "v", list(_KLL_QS)
+    ).collect()
+    return {
+        r["dist"]: {q: r[f"est_q{int(round(q * 100)):02d}"] for q in _KLL_QS}
+        for r in rows
+    }
+
+
+def _assert_rank_within(data, est, q, tol=0.02):
+    """Tie-aware rank bound: the estimate's rank interval
+    [mean(data < est), mean(data <= est)] reaches within `tol` of q."""
+    assert (data < est).mean() <= q + tol, (q, est, (data < est).mean())
+    assert (data <= est).mean() >= q - tol, (q, est, (data <= est).mean())
+
+
+def test_tdigest_rank_error_bounded(spark):
+    """One sketch per input: for uniform, heavy-tailed and TIED data,
+    every estimated quantile's realized rank stays within 2pp of the
+    target (KLL k = 200: ~1.3% rank error at 99% confidence)."""
+    data = _kll_inputs(7)
+    est = _kll_estimates(spark, data, n_parts=1)
+    assert set(est) == set(data)
+    for name, d in data.items():
+        for q in _KLL_QS:
+            _assert_rank_within(d, est[name][q], q)
+
+
+def test_tdigest_merge_of_parts_matches_whole(spark):
+    """The rollup contract: merging 8 per-part sketches must estimate
+    like a single whole-data sketch — both within 2pp rank error of the
+    whole data's truth."""
+    data = _kll_inputs(11)
+    whole = _kll_estimates(spark, data, n_parts=1)
+    merged = _kll_estimates(spark, data, n_parts=8)
+    for name, d in data.items():
+        for q in _KLL_QS:
+            _assert_rank_within(d, whole[name][q], q)
+            _assert_rank_within(d, merged[name][q], q)
 
 
 def test_tdigest_spark_rollup_matches_exact(spark):
     """End-to-end Spark path: per-(key, day) partials merged per key must
     land within a 5pp rank band of the exact percentiles (the q97
     contract), for every key."""
-    from reddit_big_data_spark.operators.tdigest import tdigest_quantiles
+    from reddit_big_data_spark.operators.sketches import kll_quantiles
     from reddit_big_data_spark.sources.io import read_table
     from tests.conftest import SF_ORACLE
 
     ev = read_table(spark, SF_ORACLE, "events").withColumn(
-        "__day", F.to_date("ts").cast("string")
+        "__day", F.to_date("ts")
     )
-    est = tdigest_quantiles(
+    est = kll_quantiles(
         ev, "event_type", "__day", "value", quantiles=[0.1, 0.5, 0.9]
     )
     exact = ev.groupBy("event_type").agg(
@@ -253,26 +281,26 @@ def test_tdigest_spark_rollup_matches_exact(spark):
 
 
 def test_kmv_overlap_empty_group_fails_loudly(spark):
-    """ADVICE r6: an empty group used to yield NULL sketches and one
-    GARBAGE estimate row (est_union NULL/-1) that flowed silently into
-    downstream math. The empty-group guard now raises inside the output
+    """ADVICE r6: an empty group must not yield a silent estimate row
+    that flows into downstream math. q122's Theta overlap estimate
+    (the test keeps q122's registered name) raises inside every output
     column (un-prunable), matching sample_train_matrix's loud contract."""
     import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import SparkRuntimeException
 
-    from reddit_big_data_spark.operators.sketches import kmv_overlap_estimate
+    from reddit_big_data_spark.operators.sketches import theta_overlap_estimate
 
     df = spark.createDataFrame(
         [("a", i) for i in range(50)], "g: string, v: long"
     )
     with pytest.raises((SparkRuntimeException, Py4JJavaError)) as ei:
-        kmv_overlap_estimate(df, "g", "v", "a", "nope", k=16).collect()
+        theta_overlap_estimate(df, "g", "v", "a", "nope").collect()
     assert "empty group" in str(ei.value)
     # review r7: the guard must survive COLUMN PRUNING — projecting only
     # est_jaccard used to bypass the est_union-only guard silently
     with pytest.raises((SparkRuntimeException, Py4JJavaError)) as ei2:
-        kmv_overlap_estimate(df, "g", "v", "a", "nope", k=16).select(
+        theta_overlap_estimate(df, "g", "v", "a", "nope").select(
             "est_jaccard"
         ).collect()
     assert "empty group" in str(ei2.value)
@@ -280,8 +308,14 @@ def test_kmv_overlap_empty_group_fails_loudly(spark):
     df2 = df.union(
         spark.createDataFrame([("b", i) for i in range(25, 75)], "g: string, v: long")
     )
-    row = kmv_overlap_estimate(df2, "g", "v", "a", "b", k=16).collect()[0]
+    row = theta_overlap_estimate(df2, "g", "v", "a", "b").collect()[0]
     assert row["est_union"] is not None and row["est_union"] > 0
+    # 75 distinct values sit far below the sketch's nominal size: exact
+    assert (row["est_union"], row["est_inter"], row["est_jaccard"]) == (
+        75.0,
+        25.0,
+        25.0 / 75.0,
+    )
 
 
 def test_bitmap_partials_merge_exactly_and_stay_bounded(spark):
