@@ -111,28 +111,6 @@ def decode_bmp(data: bytes) -> tuple[int, int, bytes]:
     return width, height, bytes(out)
 
 
-def resize_rgb_nearest(
-    pixels: bytes, width: int, height: int, target_w: int, target_h: int
-) -> bytes:
-    """Nearest-neighbor resize of top-down RGB triplets — the standard
-    floor((t + 0.5) * src / dst) source-center sampling."""
-    if len(pixels) != width * height * 3:
-        raise ValueError(
-            f"resize_rgb_nearest: need {width * height * 3} bytes, got {len(pixels)}"
-        )
-    if target_w <= 0 or target_h <= 0:
-        raise ValueError(f"resize_rgb_nearest: bad target {target_w}x{target_h}")
-    out = bytearray(target_w * target_h * 3)
-    for ty in range(target_h):
-        sy = min(height - 1, ((2 * ty + 1) * height) // (2 * target_h))
-        for tx in range(target_w):
-            sx = min(width - 1, ((2 * tx + 1) * width) // (2 * target_w))
-            s = (sy * width + sx) * 3
-            t = (ty * target_w + tx) * 3
-            out[t : t + 3] = pixels[s : s + 3]
-    return bytes(out)
-
-
 def encode_wav(samples: list[int], sample_rate: int) -> bytes:
     """Mono 16-bit PCM RIFF/WAVE from integer samples in [-32768, 32767]."""
     data = struct.pack(f"<{len(samples)}h", *samples)

@@ -60,8 +60,10 @@ def with_class_weights(df: DataFrame, label_col: str, weight_col: str = "weight"
     the reference's driver-side collect + when-chain
     (ML_Sentiment.py:96-121)."""
     counts = df.groupBy(label_col).agg(F.count("*").alias("__cnt"))
-    n_classes = counts.count()
-    total = df.count()
+    # one action for both scalars: the classes are the count rows and
+    # the row total is their sum (NULL on an empty frame)
+    n_classes, total = counts.agg(F.count("*"), F.sum("__cnt")).first()
+    total = total or 0
     weights = counts.select(
         label_col,
         (F.lit(float(total)) / (F.lit(float(n_classes)) * F.col("__cnt"))).alias(

@@ -15,7 +15,7 @@ rows — not raw data.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: partial-state columns a rollup carries; everything here merges
@@ -58,8 +58,3 @@ def merge_rollup(partials: DataFrame, keys: list[str], grain: str) -> DataFrame:
         F.max("max_v").alias("max_v"),
     )
 
-
-def rollup_avg(merged: DataFrame) -> Column:
-    """Derived average from merged states — sum-of-sums over
-    sum-of-counts, the only correct way to average across partials."""
-    return F.col("sum_v") / F.col("cnt")

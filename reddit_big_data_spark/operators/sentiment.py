@@ -1,23 +1,20 @@
-"""N10: pluggable sentiment scorer.
+"""N10: lexicon sentiment scoring.
 
 The reference downloads a John Snow Labs DL model
 (analyze_sentimentdl_use_twitter, code/nlp/Sentiment_Analysis.py:97-117)
 and unpacks its annotation structs with row-at-a-time UDFs. Offline CI
 can't (and shouldn't) depend on a model download, so per SURVEY.md §7 the
-default scorer is a deterministic lexicon model with the SAME output
-schema (positive_prob double, negative_prob double, sentiment_result
-string) — swap in a real model behind the same Transformer surface.
+scorer is a deterministic lexicon model with the SAME output columns
+(positive_prob double, negative_prob double, sentiment_result string).
 
-The default is pure native expressions (codegen'd size/filter/when — no
-Python workers), packaged as a pyspark.ml Transformer so it composes in
-Pipelines exactly like the reference's NLP stages (M12).
+`sentiment_columns` returns the three scoring expressions; q25 attaches
+them with `attach_derived` — pure native expressions (codegen'd
+size/filter/when), no Python workers and no join.
 """
 
 from __future__ import annotations
 
-from pyspark import keyword_only
-from pyspark.ml import Transformer
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Deterministic demo lexicon (kept inline so the DuckDB oracle pins the
@@ -47,91 +44,3 @@ def sentiment_columns(
         .otherwise("neutral"),
     }
 
-
-class LexiconSentimentScorer(Transformer):
-    """Pipeline-compatible Transformer (N10): tokens column in, the three
-    reference-parity sentiment columns out. Stateless — `fit` is identity
-    via Pipeline semantics."""
-
-    @keyword_only
-    def __init__(
-        self,
-        inputCol: str = "tokens",
-        positive: tuple[str, ...] = POSITIVE_WORDS,
-        negative: tuple[str, ...] = NEGATIVE_WORDS,
-    ):
-        super().__init__()
-        self._input_col = inputCol
-        self._positive = positive
-        self._negative = negative
-
-    def _transform(self, dataset: DataFrame) -> DataFrame:
-        cols = sentiment_columns(
-            F.col(self._input_col), self._positive, self._negative
-        )
-        out = dataset
-        for name, expr in cols.items():
-            out = out.withColumn(name, expr)
-        return out
-
-
-class SparkNLPSentimentScorer(Transformer):
-    """Optional-extra adapter for the reference's pretrained DL scorer
-    (John Snow Labs ``analyze_sentimentdl_use_twitter``,
-    code/nlp/Sentiment_Analysis.py:97-117). Same output schema as
-    LexiconSentimentScorer, so the two swap freely inside a Pipeline.
-
-    Requires the ``sparknlp`` extra (and its model download) — absent
-    here by design: offline CI must never depend on a model fetch, so
-    construction raises ImportError and `sentiment_scorer()` falls back
-    to the lexicon Transformer. Unlike the reference, annotation structs
-    are unpacked with native element_at/getField — not row-at-a-time
-    UDFs (reference Sentiment_Analysis.py:119-141's udf chain)."""
-
-    def __init__(self, inputCol: str = "text", model: str = "analyze_sentimentdl_use_twitter"):
-        import sparknlp  # noqa: F401 — ImportError is the advertised contract
-        from sparknlp.pretrained import PretrainedPipeline
-
-        super().__init__()
-        self._input_col = inputCol
-        self._pipeline = PretrainedPipeline(model, lang="en")
-
-    def _transform(self, dataset: DataFrame) -> DataFrame:
-        annotated = self._pipeline.transform(
-            dataset.withColumnRenamed(self._input_col, "text")
-        )
-        # sentiment: array<annotation struct>; metadata carries the class
-        # probabilities as strings. element_at/getField keep this JVM-side.
-        ann = F.element_at("sentiment", 1)
-        meta = ann.getField("metadata")
-        return (
-            annotated.withColumn(
-                "positive_prob", F.element_at(meta, "positive").cast("double")
-            )
-            .withColumn(
-                "negative_prob", F.element_at(meta, "negative").cast("double")
-            )
-            .withColumn("sentiment_result", ann.getField("result"))
-            .drop("document", "sentence_embeddings", "sentiment")
-        )
-
-
-def sentiment_scorer(backend: str = "auto", **kwargs) -> Transformer:
-    """N10 factory: ``backend='sparknlp'`` forces the pretrained adapter
-    (ImportError when the extra is missing), ``'lexicon'`` forces the
-    deterministic default, ``'auto'`` tries sparknlp and falls back."""
-    if backend == "lexicon":
-        return LexiconSentimentScorer(**kwargs)
-    if backend == "sparknlp":
-        return SparkNLPSentimentScorer(**kwargs)
-    if backend != "auto":
-        raise ValueError(f"unknown backend {backend!r}")
-    try:  # pragma: no cover - optional dependency
-        return SparkNLPSentimentScorer(**kwargs)
-    except Exception:
-        # Not just ImportError: with the extra installed but no network,
-        # the PretrainedPipeline model fetch fails with a Py4J/IO error —
-        # 'auto' means "never let the optional path break offline CI", so
-        # any construction failure falls back (explicit backend='sparknlp'
-        # still surfaces the real error).
-        return LexiconSentimentScorer(**kwargs)

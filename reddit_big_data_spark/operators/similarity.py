@@ -177,56 +177,6 @@ def _hyperplane(table: int, plane: int, dims: int) -> list[float]:
     return out
 
 
-def lsh_table_buckets(emb: Column, n_planes: int, n_tables: int, dims: int) -> Column:
-    """All tables' buckets at once: array<struct<tbl int, bucket string>>.
-
-    Per-table bucket id = the sign pattern of that table's `n_planes`
-    hyperplane dots as a bit-string, built from ONE 2-D plane
-    constant and a single transform pass — building n_tables separate
-    bucket expressions doubled Catalyst/codegen COMPILE time (the
-    dominant cost of the LSH queries at test scale; 2.3 s -> 1.0 s
-    measured). The sign bits are computed inside a one-element transform
-    so `bs` is a bound lambda attribute, evaluated once per row — slicing
-    a shared Column expression per table would re-inline the 30-dot
-    computation into every consumer (CollapseProject undoes projection
-    boundaries; see memory: expression re-inlining)."""
-    planes = F.array(
-        *[
-            F.array(*[F.lit(w) for w in _hyperplane(t, j, dims)])
-            for t in range(n_tables)
-            for j in range(n_planes)
-        ]
-    )
-    vec = emb.cast("array<double>")
-    bits = F.transform(
-        planes,
-        lambda p: F.when(
-            F.aggregate(
-                F.zip_with(vec, p, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda a, v: a + v,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0")),
-    )
-    return F.element_at(
-        F.transform(
-            F.array(bits),
-            lambda bs: F.transform(
-                F.sequence(F.lit(0), F.lit(n_tables - 1)),
-                lambda t: F.struct(
-                    t.cast("int").alias("tbl"),
-                    F.array_join(
-                        F.slice(bs, t * F.lit(n_planes) + 1, n_planes), ""
-                    ).alias("bucket"),
-                ),
-            ),
-        ),
-        1,
-    )
-
-
 def _planes_frame(
     spark, n_planes: int, n_tables: int, dims: int
 ) -> DataFrame:

@@ -14,16 +14,19 @@ codegen, no Python workers, no JVM NLP dependency:
 - tokenize:   split on whitespace runs
 - normalize:  lower + strip non-alphanumerics (Normalizer's cleanup pattern,
               NFL_Processing.py:151-156)
-- stopwords:  array_except against a broadcast-literal list (the Spark ML
-              StopWordsRemover default list's core; StopWordsCleaner at
+- stopwords:  an inline literal list (the Spark ML StopWordsRemover
+              default list's core; StopWordsCleaner at
               NFL_Processing.py:158-161)
 - stem:       S-stemmer (ies->y, sses->ss, trailing s) as a regexp_replace
               chain — deterministic, SQL-expressible on both engines, unlike
               the Porter stemmer the reference downloads (NFL_Processing.py:
               411-413). A full Porter pandas UDF can slot in behind the same
               signature when parity with an external model matters.
-- tf_idf:     explode -> groupBy(doc, term) (TF) -> groupBy(term) distinct
-              docs (DF) -> join -> log10(N/df), N COMPUTED from the corpus.
+- tf:         dictionary_stemmed_tf — explode -> groupBy(doc, raw term),
+              then stopwords dropped and the stemmer run on the distinct
+              vocabulary only
+- tf_idf:     tf_idf_from_tf — groupBy(term) (DF) -> join -> log10(N/df),
+              N passed in by the caller, COUNTED from the corpus.
 """
 
 from __future__ import annotations
@@ -54,16 +57,6 @@ def tokenize(col: Column | str) -> Column:
     return F.split(normalize(col), r"\s+")
 
 
-def remove_stopwords(tokens: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    """N3: drop stopwords. array_except also dedups RHS lookups JVM-side —
-    no shuffle, no UDF (vs StopWordsCleaner, NFL_Processing.py:158-161).
-
-    Note array_except removes duplicate tokens too (set semantics); use
-    filter() to keep duplicates when TF matters.
-    """
-    return F.filter(tokens, lambda t: ~t.isin(*stopwords))
-
-
 def s_stem(token: Column) -> Column:
     """N4: S-stemmer — the common plural-stripping subset of Porter step 1a:
     *ies->y, *sses->ss, *s (not *ss, not *us) -> drop s. One regexp chain,
@@ -76,20 +69,6 @@ def s_stem(token: Column) -> Column:
     t = F.regexp_replace(t, r"sses$", "ss")
     stemmed = F.regexp_replace(t, r"([^su])s$", r"$1")
     return F.when(token.endswith("s"), stemmed).otherwise(token)
-
-
-def stem_tokens(tokens: Column) -> Column:
-    return F.transform(tokens, s_stem)
-
-
-def term_frequencies(df: DataFrame, doc_col: str, token_col: str) -> DataFrame:
-    """Per-(doc, term) counts — the flatMap+reduceByKey TF at reference
-    NFL_Processing.py:480-481, as one exploded groupBy (map-side combine)."""
-    return (
-        df.select(doc_col, F.explode(token_col).alias("term"))
-        .groupBy(doc_col, "term")
-        .agg(F.count("*").alias("tf"))
-    )
 
 
 def dictionary_stemmed_tf(
@@ -127,40 +106,33 @@ def dictionary_stemmed_tf(
 
 
 def tf_idf_from_tf(tf: DataFrame, doc_col: str, n_docs: int) -> DataFrame:
-    """TF-IDF from a precomputed (doc, term, tf) table; see tf_idf."""
+    """N7 flagship rewrite: DataFrame-native TF-IDF from a (doc, term, tf)
+    table over a corpus of ``n_docs`` documents.
+
+    Replaces the reference's RDD chain (NFL_Processing.py:477-494): zero
+    Python round-trips, and the corpus size N is an argument the caller
+    counts (the reference hard-codes 7511 — carried wrongly into the
+    Yankees notebook at Yankees_Processing_with_NLP.py:628).
+
+    idf = log10(N / df_term); tfidf = tf * idf. The DF agg runs over the
+    already-reduced (doc,term) pairs, not raw tokens; the idf join is a
+    term-keyed join of two aggregated sides (AQE broadcasts the term side
+    when small). Returns (doc, term, tf, idf, tf_idf).
+    """
     from pyspark import StorageLevel
 
+    # Persisted: both the doc-frequency branch and the final join consume
+    # the TF table, and Catalyst does NOT reuse the exchange across the
+    # two branches (verified on the executed plan) — without this the
+    # full scan+explode+aggregate of the corpus runs twice. (doc,term,tf)
+    # is orders of magnitude smaller than the raw token stream, so
+    # MEMORY_AND_DISK is cheap even at 100 TB.
     tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
     docfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     idf = docfreq.withColumn("idf", F.log10(F.lit(float(n_docs)) / F.col("df")))
     return tf.join(idf.select("term", "idf"), "term").withColumn(
         "tf_idf", F.col("tf") * F.col("idf")
     )
-
-
-def tf_idf(df: DataFrame, doc_col: str, token_col: str) -> DataFrame:
-    """N7 flagship rewrite: DataFrame-native TF-IDF.
-
-    Replaces the reference's RDD chain (NFL_Processing.py:477-494):
-    zero Python round-trips, two shuffles total (doc,term / term), and the
-    corpus size N is COMPUTED (the reference hard-codes 7511 — carried
-    wrongly into the Yankees notebook at Yankees_Processing_with_NLP.py:628).
-
-    idf = log10(N / df_term); tfidf = tf * idf.
-    At scale: TF agg partial-aggregates map-side; the DF agg runs over the
-    already-reduced (doc,term) pairs, not raw tokens; the idf join is a
-    term-keyed join of two aggregated sides (AQE broadcasts the term side
-    when small). Returns (doc, term, tf, idf, tf_idf).
-    """
-    # The aggregated TF table is persisted inside tf_idf_from_tf: both the
-    # doc-frequency branch and the final join consume it, and Catalyst does
-    # NOT reuse the exchange across the two branches (verified on the
-    # executed plan) — without this the full scan+explode+aggregate of the
-    # corpus runs twice. (doc,term,tf) is orders of magnitude smaller than
-    # the raw token stream, so MEMORY_AND_DISK is cheap even at 100 TB.
-    tf = term_frequencies(df, doc_col, token_col)
-    n_docs = df.select(doc_col).distinct().count()
-    return tf_idf_from_tf(tf, doc_col, n_docs)
 
 
 def top_k_terms(tfidf: DataFrame, doc_col: str, k: int = 5) -> DataFrame:

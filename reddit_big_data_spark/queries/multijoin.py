@@ -9,8 +9,8 @@ join graph beyond the key chain. Spark-first plan: the three true dims
 (supplier, nation, region) broadcast; customer⋈orders and ⋈lineitem
 shuffle on their natural keys; Catalyst + AQE order the rest. At 100 TB
 only orders and lineitem are fact-sized, so the single big shuffle pair
-is on o_orderkey/l_orderkey — the same co-partitioning the bucketing
-helper (sources/bucketing.py) would pin for repeated runs.
+is on o_orderkey/l_orderkey — the co-partitioning a bucketed table
+(`bucketBy` on those keys) would pin for repeated runs.
 
 q87 completes the §2.5 window surface begun by q10/q11/q18 with the
 rank-family functions the reference never used but any analyst will:

@@ -1,8 +1,8 @@
 """Multimodal/binary-column queries: real binary columns (encode text ->
 bytes), byte lengths, content digests — and the real-codec pipeline
 (q169), where payloads are genuine BMP/WAV/RBV1 bytes encoded AND decoded
-executor-side by functions/codecs.py. The mapInPandas plumbing with the
-format-agnostic fake decoder is exercised in tests/test_multimodal.py."""
+executor-side by functions/codecs.py. decode_stats' capture-mode
+quarantine is also unit-tested in tests/test_multimodal.py."""
 
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
 """N10 sentiment query: lexicon scoring over tokenized documents,
 aggregated per lang — oracle-checked (the lexicon and formula are pure
-SQL on both engines). The Transformer packaging and zip-join-free column
-attachment are exercised in tests/test_sentiment.py."""
+SQL on both engines). The per-row probabilities and the join-free column
+attachment are unit-tested in tests/test_sentiment.py."""
 
 from __future__ import annotations
 

@@ -20,20 +20,6 @@ from pyspark.sql import types as T
 
 from reddit_big_data_spark.schemas import TESTDATA_SCHEMAS
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 # Footer-schema cache behind table_schema (r16, guide §6/§1): a bare
 # spark.read.parquet() infers the schema from the footer on EVERY call —
 # measured 86-130 ms of driver latency per call at any scale factor,
@@ -70,10 +56,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ):
                 df = df.withColumn(f.name, F.expr(f"timestamp_micros({f.name} div 1000)"))
     return df
-
-
-def read_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] = TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
 
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
@@ -129,41 +111,6 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """S3 sibling: JSON-lines source. Pass an explicit schema in
-    production — inference scans the data twice, and a single corrupt
-    line otherwise poisons the frame via the _corrupt_record column."""
-    reader = spark.read
-    if schema is not None:
-        return reader.schema(schema).json(path)
-    return reader.json(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S4 sibling: JSON-lines sink (timestamps serialize ISO-8601)."""
-    df.write.mode(mode).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """S1 sibling: ORC source — footer schema, predicate pushdown and
-    column pruning exactly like parquet (both are tested to round-trip)."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """S5 sibling: ORC sink with the same partition-pruning contract as
-    write_parquet."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
 
 
 def from_pandas(spark: SparkSession, pdf, schema=None) -> DataFrame:

@@ -1,8 +1,8 @@
 """Unit tests for the pure-Python media codecs (functions/codecs.py):
 byte-exact round trips across awkward dimensions (row padding, bottom-up
-vs top-down storage, odd RIFF chunks), real nearest-neighbor resize
-geometry, and specific ValueError failures on malformed input — real
-codec behavior, replacing the NotImplementedError stubs (VERDICT r12 #2).
+vs top-down storage, odd RIFF chunks) and specific ValueError failures
+on malformed input — real codec behavior, replacing the
+NotImplementedError stubs (VERDICT r12 #2).
 No Spark session needed: these are the bytes-level kernels the
 mapInPandas plumbing calls executor-side."""
 
@@ -20,7 +20,6 @@ from reddit_big_data_spark.functions.codecs import (
     encode_bmp,
     encode_frames,
     encode_wav,
-    resize_rgb_nearest,
 )
 
 
@@ -117,23 +116,6 @@ def test_frames_container_errors():
         decode_frames(encode_frames([b"ab"]) + b"junk")
 
 
-def test_resize_nearest_geometry():
-    """Identity at same size; center-sampling picks the expected source
-    pixel on a 2x downsample; upsample replicates pixels."""
-    px = bytes(i % 256 for i in range(8 * 8 * 3))
-    assert resize_rgb_nearest(px, 8, 8, 8, 8) == px
-    small = resize_rgb_nearest(px, 8, 8, 2, 2)
-    assert len(small) == 2 * 2 * 3
-    # ty=0 -> sy=(1*8)//4=2, tx=0 -> sx=2
-    src = (2 * 8 + 2) * 3
-    assert small[0:3] == px[src : src + 3]
-    one = bytes([7, 8, 9])
-    up = resize_rgb_nearest(one, 1, 1, 3, 2)
-    assert up == one * 6
-    with pytest.raises(ValueError, match="bad target"):
-        resize_rgb_nearest(one, 1, 1, 0, 2)
-
-
 # ---------------------------------------------------------------------------
 # Property tests (hypothesis): round-trip identity over ARBITRARY inputs —
 # the codec invariants a fixed fixture can't pin (pure Python, no Spark,
@@ -172,34 +154,6 @@ def test_wav_round_trip_property(samples, rate):
 @given(frames=st.lists(st.binary(max_size=200), max_size=10))
 def test_frames_round_trip_property(frames):
     assert decode_frames(encode_frames(frames)) == frames
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    w=st.integers(1, 12),
-    h=st.integers(1, 12),
-    tw=st.integers(1, 12),
-    th=st.integers(1, 12),
-    data=st.data(),
-)
-def test_resize_property_pixels_come_from_source(w, h, tw, th, data):
-    """Every output pixel is an actual source pixel at the center-sampled
-    coordinate; output size is a pure function of the target."""
-    px = bytes(
-        data.draw(
-            st.lists(
-                st.integers(0, 255), min_size=w * h * 3, max_size=w * h * 3
-            )
-        )
-    )
-    out = resize_rgb_nearest(px, w, h, tw, th)
-    assert len(out) == tw * th * 3
-    for ty in range(th):
-        sy = min(h - 1, ((2 * ty + 1) * h) // (2 * th))
-        for tx in range(tw):
-            sx = min(w - 1, ((2 * tx + 1) * w) // (2 * tw))
-            s, t = (sy * w + sx) * 3, (ty * tw + tx) * 3
-            assert out[t : t + 3] == px[s : s + 3]
 
 
 def test_wav_decodes_stereo_interleaved():

@@ -90,36 +90,3 @@ def test_rename_with_suffix(spark):
     df = read_table(spark, SF_SMOKE, "region")
     out = rename_with_suffix(df, "_r", keep=["r_regionkey"])
     assert set(out.columns) == {"r_regionkey", "r_name_r"}
-
-
-def test_json_round_trip(spark, tmp_path):
-    """S3/S4 siblings: JSON-lines sink -> source round-trips values and,
-    with an explicit schema, types (JSON itself erases int-vs-long)."""
-    from reddit_big_data_spark.sources.io import read_json, read_table, write_json
-
-    src = read_table(spark, SF_SMOKE, "nation")
-    p = str(tmp_path / "nation_json")
-    write_json(src, p)
-    back = read_json(spark, p, schema=src.schema)
-    assert back.schema == src.schema
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
-
-
-def test_orc_round_trip_with_partition_pruning(spark, tmp_path):
-    """S1/S5 siblings: ORC keeps schema exactly and prunes partitions on
-    re-read like parquet."""
-    from reddit_big_data_spark.sources.io import read_orc, read_table, write_orc
-
-    src = read_table(spark, SF_SMOKE, "customer")
-    p = str(tmp_path / "cust_orc")
-    write_orc(src, p, partition_by=["c_mktsegment"])
-    back = read_orc(spark, p)
-    assert sorted(f.name for f in back.schema.fields) == sorted(
-        f.name for f in src.schema.fields
-    )
-    one = back.filter(F.col("c_mktsegment") == "BUILDING")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    # partition filter must reach the scan, not survive as a post-filter
-    assert "PartitionFilters: [isnotnull(c_mktsegment" in plan
-    want = src.filter(F.col("c_mktsegment") == "BUILDING").count()
-    assert one.count() == want > 0

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from reddit_big_data_spark.operators.diff import snapshot_diff
 from reddit_big_data_spark.operators.rollup import (
     merge_rollup,
-    rollup_avg,
     time_rollup_partials,
 )
 
@@ -110,12 +109,3 @@ def test_rollup_chains_hour_day_week_losslessly(spark):
     assert sorted(map(tuple, weekly_via_day.collect())) == sorted(
         map(tuple, weekly_direct.collect())
     )
-
-
-def test_rollup_avg_is_sum_over_count(spark):
-    df = _events_df(spark)
-    hourly = time_rollup_partials(df, "ts", ["key"], "v", grain="hour")
-    daily = merge_rollup(hourly, ["key"], grain="day")
-    rows = daily.withColumn("avg_v", rollup_avg(daily)).collect()
-    for r in rows:
-        assert abs(r["avg_v"] - r["sum_v"] / r["cnt"]) < 1e-12

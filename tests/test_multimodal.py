@@ -1,230 +1,11 @@
-"""Multimodal plumbing tests: mapInPandas feature extraction with the
-format-agnostic histogram decoder (schema, values, partition
-preservation), the REAL codec decoder/resizer over genuine BMP/WAV/RBV1
-payloads (VERDICT r12 #2), and native frame sampling."""
+"""Media decode tests: decode_stats (the q169 decoder) over genuine
+BMP/WAV/RBV1 payloads, with its on_error="capture" quarantine."""
 
 from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
-from reddit_big_data_spark.functions.multimodal import (
-    FEATURE_SCHEMA,
-    byte_histogram_decoder,
-    codec_decoder,
-    extract_features,
-    frame_sample,
-    synth_codec_media,
-    synth_media,
-)
-
-
-def test_synth_media_schema_and_determinism(spark):
-    df = synth_media(spark, 30)
-    assert {f.name for f in df.schema.fields} == {"media_id", "kind", "payload", "meta"}
-    a = df.orderBy("media_id").collect()
-    b = synth_media(spark, 30).orderBy("media_id").collect()
-    assert a == b  # fully deterministic payloads
-    assert isinstance(a[0]["payload"], bytearray | bytes)
-    assert a[1]["meta"]["sample_rate"] == 16000
-
-
-def test_extract_features_fake_decoder(spark):
-    df = synth_media(spark, 24)
-    out = extract_features(df)
-    assert out.schema == FEATURE_SCHEMA
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 24
-    src = {r["media_id"]: r for r in df.collect()}
-    for mid, r in rows.items():
-        want = byte_histogram_decoder(bytes(src[mid]["payload"]), r["kind"])
-        assert r["features"] == pytest.approx(want)
-        assert abs(sum(r["features"]) - 1.0) < 1e-9  # L1-normalized
-        assert r["n_bytes"] == len(src[mid]["payload"])
-
-
-def test_extract_features_preserves_partitioning(spark):
-    df = synth_media(spark, 40).repartition(5)
-    out = extract_features(df)
-    assert out.rdd.getNumPartitions() == 5  # mapInPandas is partition-local
-
-
-def test_codec_decoder_real_formats(spark):
-    """extract_features with the REAL decoder over genuine BMP/WAV/RBV1
-    payloads: features must equal the per-format ground truth computed
-    from the generative formulas (functions/multimodal._synth_payload)."""
-    from reddit_big_data_spark.functions.multimodal import (
-        MEDIA_EVERY,
-        _codec_media_params,
-    )
-
-    ids = spark.range(12).select((F.col("id") * MEDIA_EVERY).alias("doc_id"))
-    media = synth_codec_media(ids)
-    out = extract_features(media, decoder=codec_decoder)
-    assert out.schema == FEATURE_SCHEMA
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 12
-    for mid, r in rows.items():
-        p = _codec_media_params(mid)
-        if r["kind"] == "image":
-            w, h = p["width"], p["height"]
-            vals = [(mid * 7 + i * 13) % 256 for i in range(w * h * 3)]
-            want = [
-                float(w),
-                float(h),
-                sum(vals[0::3]) / (w * h),
-                sum(vals[1::3]) / (w * h),
-                sum(vals[2::3]) / (w * h),
-            ]
-        elif r["kind"] == "audio":
-            n = p["n_samples"]
-            s = [(mid * 31 + i * 17) % 4001 - 2000 for i in range(n)]
-            want = [
-                float(p["sample_rate"]),
-                float(n),
-                sum(s) / n,
-                (sum(x * x for x in s) / n) ** 0.5,
-            ]
-        else:
-            nf = p["n_frames"]
-            vals = [
-                (mid * 7 + f * 29 + i * 13) % 256
-                for f in range(nf)
-                for i in range(48)
-            ]
-            want = [float(nf), 4.0, 4.0, sum(vals) / len(vals)]
-        assert r["features"] == pytest.approx(want), (mid, r["kind"])
-
-
-def test_codec_decoder_rejects_garbage(spark):
-    """A real codec fails loudly on malformed payloads — driver-side and
-    from the executor path alike."""
-    with pytest.raises(ValueError, match="bad magic"):
-        codec_decoder(b"abc" * 30, "image")
-    with pytest.raises(ValueError, match="unknown kind"):
-        codec_decoder(b"abc", "hologram")
-    # synth_media payloads are md5-hex text, NOT valid BMP/WAV — the real
-    # decoder must surface the codec error from the executor
-    out = extract_features(synth_media(spark, 4), decoder=codec_decoder)
-    with pytest.raises(Exception):
-        out.collect()
-
-
-def test_frame_sample_native(spark):
-    df = synth_media(spark, 12)
-    frames = frame_sample(df, frame_bytes=16, every_n=2)
-    rows = frames.collect()
-    assert len(rows) > 0
-    assert all(r["frame_idx"] % 2 == 0 for r in rows)
-    # only video rows sampled
-    kinds = {r["media_id"] for r in df.filter(F.col("kind") == "video").collect()}
-    assert {r["media_id"] for r in rows} <= kinds
-    # frame hex chunks are at most 2*frame_bytes chars
-    assert all(len(r["frame_hex"]) <= 32 for r in rows)
-
-
-def test_resize_images(spark):
-    from reddit_big_data_spark.functions.multimodal import (
-        byte_subsample_resizer,
-        resize_images,
-    )
-
-    df = synth_media(spark, 18)
-    out = resize_images(df, target_w=8, target_h=4)
-    assert out.schema == df.schema  # composes anywhere in a media pipeline
-    rows = {r["media_id"]: r for r in out.collect()}
-    src = {r["media_id"]: r for r in df.collect()}
-    assert len(rows) == 18
-    for mid, r in rows.items():
-        if r["kind"] == "image":
-            assert len(r["payload"]) == 8 * 4  # size set by TARGET only
-            assert (r["meta"]["width"], r["meta"]["height"]) == (8, 4)
-            assert bytes(r["payload"]) == byte_subsample_resizer(
-                bytes(src[mid]["payload"]), 0, 0, 8, 4
-            )
-        else:  # non-image rows pass through untouched
-            assert bytes(r["payload"]) == bytes(src[mid]["payload"])
-            assert r["meta"] == src[mid]["meta"]
-
-
-def test_bmp_resizer_real_pixels(spark):
-    """resize_images with the REAL resizer over genuine BMP payloads:
-    output payloads are valid BMPs at the target dimensions whose pixels
-    equal the nearest-neighbor resample of the DECODED source pixels, and
-    non-image rows pass through untouched."""
-    from reddit_big_data_spark.functions.codecs import (
-        decode_bmp,
-        resize_rgb_nearest,
-    )
-    from reddit_big_data_spark.functions.multimodal import (
-        MEDIA_EVERY,
-        bmp_resizer,
-        resize_images,
-    )
-
-    with pytest.raises(ValueError, match="bad magic"):
-        bmp_resizer(b"abc" * 30, 1, 1, 2, 2)
-
-    ids = spark.range(9).select((F.col("id") * MEDIA_EVERY).alias("doc_id"))
-    media = synth_codec_media(ids)
-    out = resize_images(media, target_w=6, target_h=5, resizer=bmp_resizer)
-    assert out.schema == media.schema
-    src = {r["media_id"]: r for r in media.collect()}
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 9
-    n_images = 0
-    for mid, r in rows.items():
-        if r["kind"] == "image":
-            n_images += 1
-            w, h, px = decode_bmp(bytes(r["payload"]))
-            assert (w, h) == (6, 5)
-            assert (r["meta"]["width"], r["meta"]["height"]) == (6, 5)
-            sw, sh, spx = decode_bmp(bytes(src[mid]["payload"]))
-            assert px == resize_rgb_nearest(spx, sw, sh, 6, 5)
-        else:
-            assert bytes(r["payload"]) == bytes(src[mid]["payload"])
-    assert n_images == 3  # ranks 0..8: every third is an image
-
-
-def test_extract_features_capture_mode_quarantines_bad_payloads(spark):
-    """on_error='capture' (the PERMISSIVE mode a 100 TB media corpus
-    needs): good payloads decode normally, corrupt ones cost ONE row —
-    NULL features + the codec's message in decode_error — and the row
-    count is preserved exactly."""
-    from pyspark.sql import functions as F
-
-    from reddit_big_data_spark.functions.multimodal import (
-        FEATURE_CAPTURE_SCHEMA,
-        MEDIA_EVERY,
-    )
-
-    ids = spark.range(6).select((F.col("id") * MEDIA_EVERY).alias("doc_id"))
-    media = synth_codec_media(ids)
-    # corrupt every even media_id's payload (truncate to 3 bytes)
-    corrupted = media.withColumn(
-        "payload",
-        F.when(
-            F.col("media_id") % (2 * MEDIA_EVERY) == 0,
-            F.substring("payload", 1, 3).cast("binary"),
-        ).otherwise(F.col("payload")),
-    )
-    out = extract_features(corrupted, decoder=codec_decoder, on_error="capture")
-    assert out.schema == FEATURE_CAPTURE_SCHEMA
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 6  # one row per input, none dropped
-    for mid, r in rows.items():
-        if mid % (2 * MEDIA_EVERY) == 0:
-            assert r["features"] is None
-            assert r["decode_error"] and "ValueError" in r["decode_error"]
-        else:
-            assert r["decode_error"] is None
-            assert r["features"] is not None and len(r["features"]) >= 4
-    # raise mode still fails the stage on the same input
-    with pytest.raises(Exception):
-        extract_features(corrupted, decoder=codec_decoder).collect()
-    with pytest.raises(ValueError, match="on_error"):
-        extract_features(media, on_error="ignore")
+from reddit_big_data_spark.functions.multimodal import synth_codec_media
 
 
 def test_decode_stats_capture_quarantines_and_raise_fails(spark):
@@ -267,27 +48,6 @@ def test_decode_stats_capture_quarantines_and_raise_fails(spark):
         decode_stats(media, on_error="ignore")
 
 
-def test_capture_mode_propagates_decoder_implementation_bugs(spark):
-    """ADVICE r13: capture quarantines only ValueError (the codec
-    malformed-input contract). A decoder that raises TypeError is a CODE
-    defect and must still fail the stage — not be laundered into per-row
-    decode_error data."""
-    from pyspark.sql import functions as F
-
-    from reddit_big_data_spark.functions.multimodal import MEDIA_EVERY
-
-    ids = spark.range(3).select((F.col("id") * MEDIA_EVERY).alias("doc_id"))
-    media = synth_codec_media(ids)
-
-    def buggy_decoder(payload, kind):
-        raise TypeError("implementation bug, not a corrupt payload")
-
-    with pytest.raises(Exception, match="implementation bug"):
-        extract_features(
-            media, decoder=buggy_decoder, on_error="capture"
-        ).collect()
-
-
 def test_decode_stats_capture_quarantines_null_payload_and_bad_kind(spark):
     """Review r14: MEDIA_SCHEMA leaves payload nullable and kind is
     caller data — a NULL payload or an unknown kind must cost ONE
@@ -323,60 +83,3 @@ def test_decode_stats_capture_quarantines_null_payload_and_bad_kind(spark):
         "ValueError: decode_stats: unknown kind 'hologram'"
     )
     assert rows[2 * MEDIA_EVERY]["decode_error"] is None
-
-
-def test_resize_images_passes_null_payload_and_rebuilds_null_meta(spark):
-    """Review r14: an image row with NULL payload passes through
-    untouched; NULL meta is rebuilt from the target dims, not crashed on."""
-    from pyspark.sql import functions as F
-
-    from reddit_big_data_spark.functions.codecs import decode_bmp
-    from reddit_big_data_spark.functions.multimodal import (
-        MEDIA_EVERY,
-        bmp_resizer,
-        resize_images,
-    )
-
-    media = synth_codec_media(
-        spark.range(6).select((F.col("id") * MEDIA_EVERY).alias("doc_id"))
-    )
-    # rank 0 and 3 are images; null out rank 0's payload, rank 3's meta
-    broken = media.withColumn(
-        "payload",
-        F.when(F.col("media_id") == 0, F.lit(None).cast("binary")).otherwise(
-            F.col("payload")
-        ),
-    ).withColumn(
-        "meta",
-        F.when(
-            F.col("media_id") == 3 * MEDIA_EVERY,
-            F.lit(None).cast(media.schema["meta"].dataType),
-        ).otherwise(F.col("meta")),
-    )
-    out = {r["media_id"]: r for r in resize_images(
-        broken, target_w=4, target_h=3, resizer=bmp_resizer
-    ).collect()}
-    assert out[0]["payload"] is None  # passed through, stage survived
-    resized = out[3 * MEDIA_EVERY]
-    assert (resized["meta"]["width"], resized["meta"]["height"]) == (4, 3)
-    w, h, _ = decode_bmp(bytes(resized["payload"]))
-    assert (w, h) == (4, 3)
-
-
-def test_frame_sample_empty_payload_yields_no_phantom_frames(spark):
-    """Review r14: sequence(0, -1) is DESCENDING ([0, -1]); an empty or
-    NULL video payload must produce zero frame rows, not phantom
-    frame_idx 0/-1 rows."""
-    from pyspark.sql import functions as F
-
-    from reddit_big_data_spark.functions.multimodal import frame_sample
-
-    df = spark.createDataFrame(
-        [(1, "video", b"abcdef" * 20), (2, "video", b""), (3, "video", None)],
-        "media_id long, kind string, payload binary",
-    )
-    rows = frame_sample(df, frame_bytes=8, every_n=1).collect()
-    ids = {r["media_id"] for r in rows}
-    assert 2 not in ids and 3 not in ids
-    assert all(r["frame_idx"] >= 0 for r in rows)
-    assert sum(1 for r in rows if r["media_id"] == 1) == 15  # 120B/8B

@@ -1,15 +1,11 @@
-"""Sentiment Transformer + attach/map_labels rewrites (N10, J3, U3)."""
+"""Sentiment scoring + attach/map_labels rewrites (N10, J3, U3)."""
 
 from __future__ import annotations
 
-from pyspark.ml import Pipeline
 from pyspark.sql import functions as F
 
 from reddit_big_data_spark.operators.attach import attach_derived, map_labels
-from reddit_big_data_spark.operators.sentiment import (
-    LexiconSentimentScorer,
-    sentiment_columns,
-)
+from reddit_big_data_spark.operators.sentiment import sentiment_columns
 
 
 def test_scorer_probabilities_and_labels(spark):
@@ -21,7 +17,8 @@ def test_scorer_probabilities_and_labels(spark):
         ],
         "id: int, tokens: array<string>",
     )
-    out = {r["id"]: r for r in LexiconSentimentScorer().transform(df).collect()}
+    scored = attach_derived(df, sentiment_columns(F.col("tokens")))
+    out = {r["id"]: r for r in scored.collect()}
     assert out[1]["sentiment_result"] == "positive"
     assert abs(out[1]["positive_prob"] - 3 / 5) < 1e-12  # (2+1)/(3+2)
     assert out[2]["sentiment_result"] == "negative"
@@ -29,12 +26,6 @@ def test_scorer_probabilities_and_labels(spark):
     assert abs(out[3]["positive_prob"] - 0.5) < 1e-12
     for r in out.values():
         assert abs(r["positive_prob"] + r["negative_prob"] - 1.0) < 1e-12
-
-
-def test_scorer_composes_in_pipeline(spark):
-    df = spark.createDataFrame([(1, ["fast"])], "id: int, tokens: array<string>")
-    model = Pipeline(stages=[LexiconSentimentScorer()]).fit(df)
-    assert model.transform(df).first()["sentiment_result"] == "positive"
 
 
 def test_attach_derived_no_join_in_plan(spark):
@@ -52,25 +43,3 @@ def test_map_labels_when_chain(spark):
     assert [r["v"] for r in out.collect()] == [1, 2, -1]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "pythonUDF" not in plan and "BatchEvalPython" not in plan
-
-
-def test_sentiment_scorer_factory_fallback():
-    """Offline contract: with the sparknlp extra absent, 'auto' silently
-    falls back to the lexicon Transformer, 'sparknlp' raises ImportError,
-    and unknown backends are rejected."""
-    import pytest
-
-    from reddit_big_data_spark.operators.sentiment import (
-        LexiconSentimentScorer,
-        SparkNLPSentimentScorer,
-        sentiment_scorer,
-    )
-
-    assert isinstance(sentiment_scorer("auto"), LexiconSentimentScorer)
-    assert isinstance(sentiment_scorer("lexicon"), LexiconSentimentScorer)
-    with pytest.raises(ImportError):
-        SparkNLPSentimentScorer()
-    with pytest.raises(ImportError):
-        sentiment_scorer("sparknlp")
-    with pytest.raises(ValueError):
-        sentiment_scorer("nope")

@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 import random
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from reddit_big_data_spark.operators.similarity import (
@@ -219,6 +220,53 @@ def test_hyperplanes_not_aliased_at_high_dims():
         assert all(len(set(p)) == 2 for p in planes)
 
 
+def lsh_table_buckets(emb: Column, n_planes: int, n_tables: int, dims: int) -> Column:
+    """The literal-planes reference for the broadcast-planes signature
+    path: all tables' buckets at once, array<struct<tbl int, bucket
+    string>>. Per-table bucket id = the sign pattern of that table's
+    `n_planes` hyperplane dots as a bit-string, with every hyperplane
+    inlined as an F.lit tree. The sign bits are computed inside a
+    one-element transform so `bs` is a bound lambda attribute, evaluated
+    once per row."""
+    from reddit_big_data_spark.operators.similarity import _hyperplane
+
+    planes = F.array(
+        *[
+            F.array(*[F.lit(w) for w in _hyperplane(t, j, dims)])
+            for t in range(n_tables)
+            for j in range(n_planes)
+        ]
+    )
+    vec = emb.cast("array<double>")
+    bits = F.transform(
+        planes,
+        lambda p: F.when(
+            F.aggregate(
+                F.zip_with(vec, p, lambda x, y: x * y),
+                F.lit(0.0),
+                lambda a, v: a + v,
+            )
+            >= 0,
+            F.lit("1"),
+        ).otherwise(F.lit("0")),
+    )
+    return F.element_at(
+        F.transform(
+            F.array(bits),
+            lambda bs: F.transform(
+                F.sequence(F.lit(0), F.lit(n_tables - 1)),
+                lambda t: F.struct(
+                    t.cast("int").alias("tbl"),
+                    F.array_join(
+                        F.slice(bs, t * F.lit(n_planes) + 1, n_planes), ""
+                    ).alias("bucket"),
+                ),
+            ),
+        ),
+        1,
+    )
+
+
 def test_broadcast_planes_match_literal_reference(spark):
     """The broadcast-planes signature path (one-row planes frame +
     constant-key hash join) must bucket IDENTICALLY to the literal-based
@@ -228,7 +276,6 @@ def test_broadcast_planes_match_literal_reference(spark):
         _banded_signatures,
         _planes_frame,
         _with_planes,
-        lsh_table_buckets,
     )
 
     rows = _planted(seed=3, n_clusters=3, per_cluster=4, dims=16)

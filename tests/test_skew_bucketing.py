@@ -1,13 +1,11 @@
 """Skew helpers: salted results must equal unsalted results exactly on a
-deliberately skewed fixture. Bucketing: co-bucketed join must plan with
-no Exchange (shuffle) on either side."""
+deliberately skewed fixture."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from reddit_big_data_spark.operators.skew import salted_aggregate, salted_join
-from reddit_big_data_spark.sources.bucketing import write_bucketed
 
 
 def _skewed(spark, n=10_000):
@@ -73,26 +71,3 @@ def test_salted_join_matches_plain(spark):
     )
     as_map = lambda df: {(r["k"], r["label"]): (r["c"], r["s"]) for r in df.collect()}
     assert as_map(got) == as_map(want)
-
-
-def test_cobucketed_join_has_no_shuffle(spark):
-    a = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    write_bucketed(a, "t_bucket_a", "k", num_buckets=8, sort_col="k")
-    write_bucketed(b, "t_bucket_b", "k", num_buckets=8, sort_col="k")
-    # disable broadcast so the join would normally shuffle both sides
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_bucket_a").join(spark.table("t_bucket_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_bucket_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_b")

@@ -1,7 +1,7 @@
 """Unit tests for operators/text.py — pins the TF-IDF formula
-(idf = log10(N/df), N computed) against a hand-computed fixture, the test
-SURVEY.md §5.2 calls for (the reference hard-codes N=7511 at
-code/nlp/NFL_Processing.py:486; this proves ours computes it)."""
+(idf = log10(N/df), N the corpus size the caller counts) against a
+hand-computed fixture, the test SURVEY.md §5.2 calls for (the reference
+hard-codes N=7511 at code/nlp/NFL_Processing.py:486; q09 counts it)."""
 
 from __future__ import annotations
 
@@ -11,10 +11,8 @@ from pyspark.sql import functions as F
 
 from reddit_big_data_spark.operators.text import (
     normalize,
-    remove_stopwords,
     s_stem,
-    stem_tokens,
-    tf_idf,
+    tf_idf_from_tf,
     tokenize,
     top_k_terms,
 )
@@ -29,12 +27,6 @@ def test_normalize_tokenize(spark):
     assert row["t"] == ["hello", "world", "spark", "sql"]
 
 
-def test_stopwords_keep_duplicates(spark):
-    df = spark.createDataFrame([(["the", "cat", "and", "cat"],)], ["toks"])
-    row = df.select(remove_stopwords(F.col("toks")).alias("t")).first()
-    assert row["t"] == ["cat", "cat"]  # duplicates preserved (TF needs them)
-
-
 def test_s_stem(spark):
     df = spark.createDataFrame(
         [("queries",), ("classes",), ("tables",), ("chess",), ("bus",), ("cat",)],
@@ -45,20 +37,17 @@ def test_s_stem(spark):
 
 
 def test_tfidf_formula_n_computed(spark):
-    # 3 docs; term distribution hand-computed.
-    df = spark.createDataFrame(
-        [
-            (1, ["a", "a", "b"]),
-            (2, ["a", "c"]),
-            (3, ["c", "c", "c"]),
-        ],
-        ["doc", "tokens"],
+    # 3 docs (1: a a b, 2: a c, 3: c c c) as a hand-built (doc, term, tf)
+    # table; term distribution hand-computed.
+    tf = spark.createDataFrame(
+        [(1, "a", 2), (1, "b", 1), (2, "a", 1), (2, "c", 1), (3, "c", 3)],
+        ["doc", "term", "tf"],
     )
+    n = 3
     out = {
         (r["doc"], r["term"]): (r["tf"], r["idf"], r["tf_idf"])
-        for r in tf_idf(df, "doc", "tokens").collect()
+        for r in tf_idf_from_tf(tf, "doc", n_docs=n).collect()
     }
-    n = 3
     # term a: df=2; term b: df=1; term c: df=2
     assert out[(1, "a")][0] == 2
     assert math.isclose(out[(1, "a")][1], math.log10(n / 2))
@@ -74,14 +63,6 @@ def test_top_k_deterministic_ties(spark):
     )
     got = [r["term"] for r in top_k_terms(df, "doc", k=2).orderBy("rn").collect()]
     assert got == ["m", "a"]  # tie between a/z broken alphabetically
-
-
-def test_stem_tokens_maps_arrays(spark):
-    df = spark.createDataFrame([(["queries", "rows"],)], ["toks"])
-    assert df.select(stem_tokens(F.col("toks")).alias("t")).first()["t"] == [
-        "query",
-        "row",
-    ]
 
 
 def test_q70_survives_single_token_documents(spark, tmp_path):
